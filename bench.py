@@ -104,8 +104,7 @@ def main() -> None:
     transcripts = spark.read.parquet(tmp)
     n_turns = transcripts.count()
 
-    # -- headline: full KG pipeline (cold; eager stage caching auto-
-    #    gates on input size, pipeline.py — OFF below 100k turns) -------
+    # -- headline: full KG pipeline (cold) ------------------------------
     t0 = time.time()
     pipe = KGPipeline(transcripts)
     n_triples = pipe.triples().count()
@@ -114,9 +113,7 @@ def main() -> None:
 
     # warm re-run (fresh stage frames, warm JVM/JIT/Python workers):
     # separates code cost from first-run compilation + box state
-    for df in (pipe.mentions, pipe.docs, pipe.tt, pipe.convs, pipe.cits,
-               pipe.fold, pipe.mats):
-        df.unpersist()
+    pipe.kg.unpersist()
     t0 = time.time()
     pipe = KGPipeline(transcripts)
     pipe.triples().count()

@@ -270,8 +270,8 @@ RANK_NAMES = [
 ]
 
 # attrs that make a flat unit its own cited taxon (the generator's
-# flat convention carries taxon attrs directly on the unit); shared by
-# the citation assembler and the differential test oracle
+# flat convention carries taxon attrs directly on the unit); read by
+# the per-document transform (refimpl.resolve_citation_units)
 TAXON_KEYS = frozenset(RANK_NAMES) | {
     "rank", "authorityName", "baseAuthorityName", "authority",
 }

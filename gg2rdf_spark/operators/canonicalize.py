@@ -43,9 +43,8 @@ def connected_components(
     from the measured edge count and applies it EXPLICITLY with
     ``repartition(width, key)`` at every shuffle boundary — never by
     mutating ``spark.sql.shuffle.partitions``, which is session-global
-    and therefore races every concurrently-built plan (the eager-cache
-    waves submit jobs from a thread pool, and several operators read
-    that conf at plan-build time; round-4 ADVICE).  Because both sides
+    and therefore races every concurrently-built plan (several
+    operators read that conf at plan-build time; round-4 ADVICE).  Because both sides
     of each join arrive hash-partitioned on the join key at the SAME
     width, EnsureRequirements elides any extra exchange, so the loop's
     shuffles run at exactly ``width`` regardless of the session

@@ -2,15 +2,17 @@
 
 ``parse_mentions`` is the Arrow-vectorized analog of the reference's
 DOM parse + CSS selections (gg2rdf.ts:57-60, :136-138, :327-339): a
-``mapInPandas`` over transcript turns.  The pipeline's one
-full-stream exchange is the TURN repartition by conv_id feeding it
+``mapInPandas`` over transcript turns.  Its one full-stream
+exchange is the TURN repartition by conv_id feeding it
 (round 4; previously a mention-level row_number window — ~15× more
 rows exchanged AND sorted).  On an Iceberg table already bucketed by
 conv_id the exchange disappears entirely (storage-partitioned scan).
 
-Downstream conv-level frames (``docs_frame``, ``treatment_taxon``)
-are hash aggregates on ``conv_id`` — map-side partial aggregation
-keeps their shuffles conv-level (small).
+The mention stream feeds entity linking (``operators/linking.py``);
+the KG engine itself parses each conversation inside its one
+per-conversation pass (``pipeline.py``).  ``treatment_taxon`` is a hash
+aggregate on ``conv_id`` — map-side partial aggregation keeps its
+shuffle conv-level (small).
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ def parse_mentions(transcripts: DataFrame) -> DataFrame:
     """transcripts → one row per mention span, with a per-conversation
     global document-order column ``g_ord``.
 
-    The pipeline's ONE full-stream shuffle happens here — but on the
+    The parse's ONE full-stream shuffle happens here — but on the
     RAW TURNS, not the parsed mentions: turns are repartitioned by
     conv_id and sorted by turn_idx within partitions, and the
     Arrow-batched parse then assigns ``g_ord`` with a running
@@ -91,34 +93,6 @@ def parse_mentions(transcripts: DataFrame) -> DataFrame:
         .sortWithinPartitions("conv_id", "turn_idx")
         .mapInPandas(gen, PARSED_SCHEMA)
     )
-
-
-def docs_frame(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Per-conversation document/MODS attribute bags (≙ <document> attr
-    bag + MODS subtree, gg2rdf.ts:75-82, :969-1011).  ``doc_attrs`` is
-    null when the conversation lacks a [[document]] span (→ failed,
-    gg2rdf.ts:76-80)."""
-    meta = (
-        mentions.filter(F.col("kind").isin("document", "mods"))
-        .groupBy("conv_id")
-        .agg(
-            F.min_by(
-                F.when(F.col("kind") == "document", F.col("attrs")),
-                F.when(
-                    F.col("kind") == "document",
-                    F.struct("turn_idx", "start"),
-                ),
-            ).alias("doc_attrs"),
-            F.min_by(
-                F.when(F.col("kind") == "mods", F.col("attrs")),
-                F.when(
-                    F.col("kind") == "mods", F.struct("turn_idx", "start")
-                ),
-            ).alias("mods_attrs"),
-        )
-    )
-    convs = transcripts.select("conv_id").distinct()
-    return convs.join(meta, "conv_id", "left")
 
 
 def treatment_taxon(mentions: DataFrame) -> DataFrame:

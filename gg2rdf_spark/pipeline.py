@@ -1,213 +1,117 @@
-"""KG-construction pipeline facade (north_rule stages 1-4).
+"""KG-construction pipeline facade: one Arrow pass per conversation.
 
-    transcripts ──parse──▶ mentions ──bundles──▶ candidate frames
-        │                                           │
-        └──▶ docs/treatment frames ──────┬── fold (D3) ──▶ triples ──▶ turtle
-                                         └────────────────▶ status
+    transcripts ──repartition/sort on conv_id──▶ stream_groups
+        └─▶ refimpl.transform_turns (one conversation at a time)
+              └─▶ (conv_id, status, ttl, triples[]) ──▶ triples()
+                                                   ├──▶ status()
+                                                   └──▶ turtle()
 
-``kg_triples`` returns the reference-shape triples frame;
-``kg_turtle`` the per-conversation Turtle documents; ``kg_status``
-the per-conversation Status enum (0-3).
+Every output of gg2rdf is a function of one document (gg2rdf.ts:52-1532:
+one parse, one registry of subjects, one serialization).  A
+conversation plays that document here, so the engine shuffles the
+turns once on ``conv_id``, crosses the Python boundary once per Arrow
+chunk, and runs the serial per-document transform
+(:mod:`gg2rdf_spark.refimpl`) on each complete conversation.  The
+triples, the Status and the Turtle document all come out of the same
+call, in one row per conversation; the three outputs are projections
+of that row.  Memory is bounded by one Arrow chunk plus the largest
+conversation (:func:`grouped.stream_groups`); a very large
+conversation lands on one task, as the reference converts one
+document in one process.
 
-Scale notes: the parse stage is narrow (no shuffle); conv-level
-aggregation shuffles once on conv_id; the fold groups the (small)
-citation frame by conv_id.  Caching ``mentions`` avoids re-parsing
-across the frames that consume it.  At cluster scale the input should
-arrive bucketed/partitioned by conv_id so the groupBys are co-located
-(see plans/PLANS.md).
+``parse_mentions`` still runs on its own for entity linking, which
+reads the raw mention stream (:mod:`operators.linking`).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
-from .operators import assemble as A
-from .operators import extract as E
-from .operators import serialize as S
-from .operators import triples as T
+from . import refimpl
+from .operators.extract import parse_mentions
+from .operators.grouped import stream_groups
+
+# One row per emitted triple.  Raw comment lines (errors/warnings
+# written into the document) are subj='', pred='#', obj=line.  The
+# ordering columns give refimpl's emission order: ``block`` is the
+# position of the subject (or raw line) in the Turtle document,
+# ``subj_ord`` the predicate's insertion position within its subject,
+# ``obj_ord`` the object's insertion position within that predicate.
+TRIPLE_SCHEMA = StructType([
+    StructField("conv_id", StringType()),
+    StructField("block", IntegerType()),
+    StructField("subj_ord", LongType()),
+    StructField("subj", StringType()),
+    StructField("pred", StringType()),
+    StructField("obj", StringType()),
+    StructField("obj_ord", LongType()),
+])
+
+CONV_SCHEMA = StructType([
+    StructField("conv_id", StringType()),
+    StructField("status", IntegerType()),
+    StructField("ttl", StringType()),
+    StructField("triples", ArrayType(TRIPLE_SCHEMA)),
+])
+
+
+def transform_conversation(turns: pd.DataFrame) -> list[tuple]:
+    """One conversation's turns, in any order (the transform parses
+    them in ``turn_idx`` order) → its single ``CONV_SCHEMA`` row."""
+    conv_id = turns["conv_id"].iloc[0]
+    res = refimpl.transform_turns(conv_id, [
+        (int(t), x) for t, x in zip(turns["turn_idx"], turns["text"])])
+    triples = []
+    for block, (kind, payload) in enumerate(res.events):
+        if kind == "raw":
+            triples.append((conv_id, block, 0, "", "#", payload, 0))
+            continue
+        for p_ord, pred in enumerate(payload.properties):
+            for o_ord, obj in enumerate(payload.objs(pred)):
+                triples.append(
+                    (conv_id, block, p_ord, payload.uri, pred, obj, o_ord))
+    return [(conv_id, res.status, res.turtle(), triples)]
 
 
 class KGPipeline:
-    """Builds and caches the stage frames for one transcripts input.
+    """The per-conversation frame of one transcripts input and its
+    projections.  ``cache=True`` persists that frame, so the triples,
+    status and Turtle outputs share one evaluation; the streaming
+    runner passes ``cache=False`` (one output per micro-batch, which
+    the sink persists itself)."""
 
-    ``eager`` materializes each persisted stage frame in dependency
-    order before the output action runs.  Rationale (round-3 event-log
-    profile): the triples plan contains ~24 broadcast/semi-join small
-    sides; Spark computes each in its own concurrent sub-job, and when
-    the caches are still lazy those jobs race to recompute the SAME
-    upstream lineage (parse → bundles) — ~10-13 s of duplicated work
-    per sub-job at the 200k-conversation corpus.  Counting the frames
-    in order materializes every cache exactly once, so broadcast
-    builds hit warm caches."""
-
-    def __init__(self, transcripts: DataFrame, cache: bool = True,
-                 eager: bool | None = None):
-        n_rows: int | None = None
-        if not cache:
-            # eager waves only materialize persisted frames; without
-            # caching the gate's sizing count would be a pure extra
-            # evaluation of the input lineage (per micro-batch, in the
-            # streaming path) deciding a flag nothing reads
-            eager = False
-        elif eager is None:
-            # spark.gg2rdf.eagerCache: "true" / "false" force it;
-            # default "auto" enables it only when the input clears
-            # spark.gg2rdf.eagerCacheMinRows (default 100k turns).
-            # Rationale for ON at scale (round-3/4 event-log profiles,
-            # 200k-400k-conv corpora): with lazy caches the ~24
-            # broadcast sub-jobs of the triples plan race to recompute
-            # the SAME upstream lineage — ~4650 core-s of task time for
-            # ~1400 core-s of work at 400k convs on local-cluster[4,4],
-            # growing with BOTH corpus size and parallelism (it was the
-            # entire N->4N "scaling collapse").  Rationale for OFF at
-            # toy scale (round-4 VERDICT): the wave counts are serial
-            # actions before the output action — pure overhead when the
-            # lineage they'd deduplicate runs in seconds (sf0.1 = 25k
-            # turns; the 200k-conv scaling corpus = 1M turns).  The
-            # count deciding "auto" is cheap on the parquet-backed
-            # inputs every at-scale caller reads (metadata count).
-            conf = transcripts.sparkSession.conf
-            mode = conf.get("spark.gg2rdf.eagerCache", "auto").lower()
-            if mode in ("true", "false"):
-                eager = mode == "true"
-            else:
-                min_rows = int(conf.get(
-                    "spark.gg2rdf.eagerCacheMinRows", "100000"))
-                n_rows = transcripts.count()
-                eager = n_rows >= min_rows
-        # Mention-cache layout gate (round 6): pre-partitioning the
-        # RAW mention stream by conv_id buys exchange-free downstream
-        # plans, but the exchanges it removes are post-partial-agg
-        # (conv-level) or kind-subset frames — SMALL at scale — while
-        # the pre-partition itself shuffles every mention row (bytes
-        # linear in the corpus; guide §2.3 "aggregate before you
-        # shuffle").  So it pays only in the overhead-dominated small
-        # regime (measured round 6: sf0.1 clear win; 200k-conv
-        # interleaved A/B ~6 s LOSS from the extra mention-stream
-        # shuffle).  Size-gated like the eager gate (same default
-        # threshold: below ~100k turns the job is stage-overhead-
-        # bound), overridable via spark.gg2rdf.mentionPartitionMaxRows.
-        partition_mentions = False
-        if cache:
-            conf = transcripts.sparkSession.conf
-            pm_max = int(conf.get(
-                "spark.gg2rdf.mentionPartitionMaxRows",
-                conf.get("spark.gg2rdf.eagerCacheMinRows", "100000")))
-            if n_rows is None:
-                n_rows = transcripts.count()
-            partition_mentions = n_rows < pm_max
+    def __init__(self, transcripts: DataFrame, cache: bool = True):
         self.transcripts = transcripts
-        # Persist every reused stage frame hash-partitioned by conv_id
-        # at ONE shared width and sorted within partitions (round-6
-        # optimization, guide §2.4 "remove shuffles outright"): a
-        # mapInPandas node reports UnknownPartitioning, so without this
-        # every downstream conv-keyed join/agg/window re-exchanged the
-        # cached frame — the sf0.1 triples plan carried 39 Exchanges /
-        # 14 SortMergeJoins, nearly all between conv-keyed caches.
-        # With the caches co-partitioned (and pre-sorted on the SMJ
-        # keys), EnsureRequirements elides both the exchange AND the
-        # sort on each side — the persisted-bucketed-table pattern.
-        # Cost: one extra exchange per cached frame at build; the
-        # mention-level one replaces the conv-keyed exchanges of ~6
-        # consumers, the conv-level ones are conv-sized rows.  At
-        # cluster scale the same layout comes from a conv_id-bucketed
-        # input table; the width is the session's shuffle sizing knob.
-        from .operators.grouped import scaled_partitions
-
-        W = scaled_partitions(transcripts)
-
-        def _conv_persist(df: DataFrame, *sort_cols: str) -> DataFrame:
-            return (
-                df.repartition(W, "conv_id")
-                .sortWithinPartitions("conv_id", *sort_cols)
-                .persist()
-            )
-
-        self.mentions = E.parse_mentions(transcripts)
-        if cache:
-            if partition_mentions:
-                # sorted by (conv_id, g_ord): citation_frame's
-                # document-order window then needs neither exchange
-                # nor sort (small-regime layout, see gate above)
-                self.mentions = _conv_persist(self.mentions, "g_ord")
-            else:
-                self.mentions = self.mentions.persist()
-        self.docs = E.docs_frame(transcripts, self.mentions)
-        self.tt = E.treatment_taxon(self.mentions)
-        if cache:
-            # docs/tt feed BOTH the conv-bundle pass and citation_frame
-            # (which joins the attr bags directly so the bundle pass
-            # stays narrow) — persist to avoid recomputing the aggs.
-            # Their final aggregates/joins are keyed on conv_id, so
-            # they come out hash(conv_id) at W either from the
-            # pre-partitioned mentions cache or from their own agg
-            # exchanges — no re-repartition needed in either regime.
-            self.docs = self.docs.persist()
-            self.tt = self.tt.persist()
-        # with the conv-level caches pre-partitioned, the Arrow passes'
-        # internal width-control repartitions are redundant — the
-        # inputs already arrive hash(conv_id) at W (the bundle rows are
-        # per-conv independent, so this changes layout, never values)
-        self.convs = A.conv_frame(self.docs, self.tt,
-                                  repartition=not cache)
-        if cache:
-            self.convs = _conv_persist(self.convs)
-        self.cits = A.citation_frame(self.mentions, self.docs, self.tt,
-                                     repartition=not cache)
-        if cache:
-            # sorted by (conv_id, unit_ord): the fold's stream_groups
-            # pass and the (conv_id, unit_ord) joins skip their sorts
-            self.cits = _conv_persist(self.cits, "unit_ord")
-        self.fold = A.citation_fold(self.cits, self.convs,
-                                    pre_partitioned=cache)
-        if cache:
-            # the fold feeds 3+ union branches of the triples frame;
-            # unpersisted it re-runs the grouped Python pass per branch
-            self.fold = _conv_persist(self.fold, "unit_ord")
-        self.figs = A.figure_frame(self.mentions)
-        if cache:
-            # figs feeds THREE consumers (treatment cito:cites,
-            # publication fabio:hasPart, the figure subject block) —
-            # unpersisted, the figure Arrow pass re-ran per consumer
-            self.figs = _conv_persist(self.figs)
-        self.mats = A.material_frame(self.mentions, self.convs)
-        if cache:
-            self.mats = _conv_persist(self.mats)
-        self.verns = A.vernacular_frame(self.mentions)
-        if cache and eager:
-            # materialize in dependency WAVES, counting each wave's
-            # frames concurrently (Spark job submission is
-            # thread-safe): a strict serial chain of 7 count barriers
-            # leaves most of a wide cluster idle during the small
-            # counts; within a wave every input is already cached, so
-            # concurrent counts share no recomputation
-            from concurrent.futures import ThreadPoolExecutor
-
-            waves = [
-                (self.mentions,),
-                (self.docs, self.tt),
-                (self.convs, self.cits),
-                (self.fold, self.mats, self.figs),
-            ]
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                for wave in waves:
-                    list(ex.map(lambda df: df.count(), wave))
+        self.mentions = parse_mentions(transcripts)
+        kg = stream_groups(
+            transcripts.select("conv_id", "turn_idx", "text"), "conv_id",
+            transform_conversation, CONV_SCHEMA)
+        self.kg = kg.persist() if cache else kg
+        # The stage frames of the former relational pipeline all name
+        # the one per-conversation frame: callers that count or
+        # unpersist them per stage keep working, and see the one pass.
+        self.docs = self.tt = self.convs = self.cits = self.kg
+        self.fold = self.figs = self.mats = self.verns = self.kg
 
     def triples(self) -> DataFrame:
-        return T.triples_frame(
-            self.convs, self.cits, self.fold, self.figs, self.mats, self.verns
-        )
+        return self.kg.select(F.inline("triples"))
 
     def flat_triples(self) -> DataFrame:
         """P/R-comparison shape: (conv_id, subj, pred, obj)."""
         return self.triples().select("conv_id", "subj", "pred", "obj")
 
     def turtle(self) -> DataFrame:
-        return S.turtle_frame(self.triples())
+        """(conv_id, ttl): one document per conversation that emits at
+        least one triple."""
+        return self.kg.filter(F.size("triples") > 0).select("conv_id", "ttl")
 
     def status(self) -> DataFrame:
-        return T.status_frame(self.convs, self.cits, self.mats, self.fold)
+        return self.kg.select("conv_id", "status")
 
 
 def kg_triples(transcripts: DataFrame, cache: bool = True) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Serial single-conversation oracle (differential-test reference).
+"""The per-document transform: one conversation → triples, Status, Turtle.
 
 A faithful Python port of the reference per-document control flow
 (`/root/reference/src/gg2rdf.ts:52-1532`), operating on our transcript
@@ -8,10 +8,15 @@ the ``<document>`` attribute bag and MODS subtree, and bracketed
 mention spans ≙ ``<taxonomicName>`` / ``<materialsCitation>`` /
 ``<figureCitation>`` / ``<vernacularName>`` elements.
 
-This module is **only** used by tests (P/R comparison against the
-distributed pipeline per SURVEY.md §5) and is deliberately serial —
-it mirrors the reference's one-pass recursive interpreter, statement
-by statement, so the two implementations share no control flow.
+It is deliberately serial — it mirrors the reference's one-pass
+recursive interpreter, statement by statement — and it is the KG
+engine's core: ``pipeline.KGPipeline`` runs :func:`transform_turns` on
+each complete conversation inside one grouped Arrow pass.  Being the
+engine, it is no longer an independent oracle for it; correctness
+rests on the DuckDB recipe-SQL oracles (``sources/kgoracle.py``), the
+golden pairs in ``tests/test_kernels.py`` and ``tests/test_refimpl.py``,
+the Turtle validator (``functions/ttl_check.py``) and the benchmark's
+output checks.
 
 Model mapping notes (deviations from the XML original, all fixed by
 the corpus generator so both sides see the same convention):

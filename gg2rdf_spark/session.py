@@ -36,12 +36,12 @@ def build_session(
         # COALESCING OFF.  Measured (round 3, 200k-conv corpus,
         # local[32]): coalescing cost 62.5 s -> 52.5 s without it, with
         # erratic 3-5x outlier runs (91/292 s) when it re-planned badly
-        # — it serializes small-byte but CPU-heavy Arrow stages (bundle
-        # rows are ~KB on the wire but cost ms of Python each) and adds
-        # driver re-planning at every stage boundary of this very wide
-        # DAG.  This pipeline sizes its shuffles explicitly
-        # (shuffle.partitions / spark.gg2rdf.groupPartitions), which is
-        # the cluster-correct practice at 100 TB anyway.
+        # — it serializes small-byte but CPU-heavy Arrow stages (a
+        # conversation's turns are ~KB on the wire but cost ms of Python
+        # each) and adds re-planning at every stage boundary.
+        # This pipeline sizes its shuffles explicitly
+        # (spark.sql.shuffle.partitions), which is the cluster-correct
+        # practice at 100 TB anyway.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -534,7 +534,7 @@ SELECT {sel} FROM (
 def kg_ttl_convs_sql(source: str = "documents") -> str:
     """Conversation universe of the Turtle sink — every conversation
     that emits at least one triple gets exactly one .ttl document
-    (serialize.turtle_frame groups the triples frame per conv).  The
+    (KGPipeline.turtle keeps the conversations with triples).  The
     ttl_validate driver query pairs this with n_errors = 0: the Spark
     side RUNS the pure-Python Turtle validator (functions/ttl_check.py,
     the `riot --validate` analog of reference

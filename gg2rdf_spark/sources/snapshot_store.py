@@ -156,7 +156,9 @@ def commit_append(
     skipped without writing (exact resume for at-least-once
     schedulers, ≙ materialize()'s manifest anti-join).  Publish
     conflicts are retried against the re-read state — appends commute,
-    so the already-written data files are reused verbatim.
+    so the already-written data files are reused verbatim.  An empty
+    ``triples`` frame publishes no version (it is not recorded as a
+    run either: a replay is as cheap).
 
     The lineage carried in each manifest is bounded to the newest
     ``max_run_history`` run_ids so manifests stay small at any commit
@@ -195,6 +197,10 @@ def commit_append(
                 F.countDistinct("conv_id").alias("n_convs"),
             ).collect()
         }
+        if not counters:
+            # nothing to append: publishing would add an empty version
+            return {"run_id": run_id, "version": cur["version"],
+                    "skipped": True, "n_triples": 0}
         token = f"{int(time.time() * 1000)}-{os.urandom(4).hex()}"
         new_dirs = _write_data_files(df, root, token)
     finally:

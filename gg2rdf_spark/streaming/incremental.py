@@ -12,11 +12,18 @@ front-end for continuously-arriving transcript files:
   conversations whose bucket is missing from the sink manifest
   (exact resume after failure; re-delivery safe).
 * :func:`stream_transcripts` — Structured Streaming file source →
-  ``foreachBatch`` running the full KG pipeline per micro-batch and
+  ``foreachBatch`` running the KG pipeline per micro-batch and
   appending to the triple sink.  foreachBatch is the right tool
-  because the pipeline's grouped folds are per-conversation and each
+  because the pipeline is one pass per conversation and each
   conversation arrives whole (one file); no cross-batch state store
   is needed — matching the reference's one-document-at-a-time unit.
+* :func:`stream_transcripts_snapshots` — the same runner committing
+  each micro-batch to the snapshot store, which reads the batch's
+  input once.
+
+Run ids are ``batch-{token}-{batch_id}``, salted per checkpoint
+generation (:func:`_checkpoint_token`); a checkpoint written before
+the salt keeps its unsalted ``batch-{batch_id}`` ids.
 """
 
 from __future__ import annotations
@@ -41,19 +48,32 @@ def _checkpoint_token(checkpoint_dir: str) -> str:
     skipped entirely (silent loss).  The token is created atomically
     ('x' open) alongside the checkpoint and dies with it, giving every
     checkpoint generation a fresh run-id namespace while keeping
-    within-generation replays idempotent."""
+    within-generation replays idempotent.
+
+    A checkpoint that already holds Spark offset state but no token
+    was written before run ids were salted: its batches were committed
+    as ``batch-{id}``, and Spark may replay one of them.  That
+    generation gets the empty token, which keeps the unsalted ids
+    (:func:`_run_id`), so an upgrade cannot re-commit a batch."""
     import os
     import uuid
 
     os.makedirs(checkpoint_dir, exist_ok=True)
     p = os.path.join(checkpoint_dir, "gg2rdf-run-token")
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    legacy = (not os.path.exists(p) and os.path.isdir(offsets)
+              and bool(os.listdir(offsets)))
     try:
         with open(p, "x") as f:
-            f.write(uuid.uuid4().hex[:12])
+            f.write("" if legacy else uuid.uuid4().hex[:12])
     except FileExistsError:
         pass
     with open(p) as f:
         return f.read().strip()
+
+
+def _run_id(token: str, batch_id: int) -> str:
+    return f"batch-{token}-{batch_id}" if token else f"batch-{batch_id}"
 
 
 def run_incremental(transcripts: DataFrame, sink_path: str,
@@ -98,7 +118,7 @@ def stream_transcripts(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        run_id = f"batch-{token}-{batch_id}"
+        run_id = _run_id(token, batch_id)
         if run_id in seen_run_ids(batch_df.sparkSession, sink_path):
             return  # replayed batch already fully committed
         pipe = KGPipeline(batch_df, cache=False)
@@ -149,11 +169,11 @@ def stream_transcripts_snapshots(
     token = _checkpoint_token(checkpoint_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness pre-scan: commit_append reads the batch once and
+        # publishes no version for an empty one
         commit_append(
             KGPipeline(batch_df, cache=False).triples(), root,
-            n_buckets=n_buckets, run_id=f"batch-{token}-{batch_id}",
+            n_buckets=n_buckets, run_id=_run_id(token, batch_id),
         )
 
     return (

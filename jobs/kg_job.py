@@ -7,7 +7,7 @@
         [--shuffle-partitions 2048]
 
 Reads a transcripts table (conv_id, turn_idx, role, text, tool, ts),
-runs extraction → fold → assembly, and materializes the triple sink
+runs the per-conversation KG pass, and materializes the triple sink
 partitioned by conv bucket with a per-bucket manifest — re-running
 after a failure skips completed buckets (exact resume, north_rule).
 

@@ -390,6 +390,53 @@ class TestStreaming:
             spark, in_dir, root, ckpt).awaitTermination(300)
         assert ss.read_triples(spark, root).count() == n2
 
+    @pytest.mark.slow
+    def test_legacy_checkpoint_keeps_unsalted_run_ids(self, spark, tmp_path):
+        """A checkpoint written before run ids were salted holds offset
+        state but no gg2rdf-run-token, and its batches were committed as
+        'batch-{id}'.  When Spark replays such a batch after the
+        upgrade, the runner must reuse the unsalted id so the store
+        skips it instead of committing it a second time."""
+        import os
+
+        from gg2rdf_spark.pipeline import KGPipeline
+        from gg2rdf_spark.sources import snapshot_store as ss
+        from gg2rdf_spark.sources.synthsql import transcripts_sql
+        from gg2rdf_spark.streaming.incremental import (
+            stream_transcripts_snapshots,
+        )
+
+        in_dir = str(tmp_path / "in")
+        root = str(tmp_path / "store")
+        ckpt = str(tmp_path / "ckpt")
+        spark.sql(transcripts_sql(
+            "(SELECT id AS doc_id FROM range(10))", dialect="spark")
+        ).coalesce(1).write.parquet(in_dir)
+        # a live checkpoint with batch 0 planned (offsets/0) ...
+        stream_transcripts_snapshots(
+            spark, in_dir, str(tmp_path / "scratch"), ckpt
+        ).awaitTermination(300)
+        assert os.listdir(os.path.join(ckpt, "offsets"))
+        # ... from before the token, and crashed after the sink commit
+        # but before Spark's own commit: batch 0 will be replayed
+        os.remove(os.path.join(ckpt, "gg2rdf-run-token"))
+        for name in ("0", ".0.crc"):
+            os.remove(os.path.join(ckpt, "commits", name))
+        # the store already holds that batch under the legacy id
+        ss.commit_append(
+            KGPipeline(spark.read.parquet(in_dir), cache=False).triples(),
+            root, run_id="batch-0")
+        v1 = ss.current_version(root)
+        n1 = ss.read_triples(spark, root).count()
+        assert n1 > 100
+
+        stream_transcripts_snapshots(
+            spark, in_dir, root, ckpt).awaitTermination(300)
+        assert ss.current_version(root) == v1
+        assert ss.read_triples(spark, root).count() == n1
+        with open(os.path.join(ckpt, "gg2rdf-run-token")) as f:
+            assert f.read() == ""
+
 
 class TestDelete:
     def test_delete_conversations(self, spark, tmp_path):
@@ -738,10 +785,8 @@ class TestParseOrdering:
 
 
 class TestRound6Layout:
-    """Focused tests for the round-6 physical-layout optimizations:
-    results must be invariant to the layout flags (co-partitioned
-    stage caches, pre_partitioned stream_groups, the mention-layout
-    size gate, positional balanced unions)."""
+    """The engine's results must not depend on whether its
+    per-conversation frame is persisted."""
 
     def _transcripts(self, spark, n=40):
         from gg2rdf_spark.sources.synthsql import transcripts_sql
@@ -749,61 +794,10 @@ class TestRound6Layout:
         return spark.sql(transcripts_sql(
             f"(SELECT id AS doc_id FROM range({n}))", dialect="spark"))
 
-    def test_stream_groups_pre_partitioned_matches_default(self, spark):
-        """pre_partitioned=True must produce identical groups when the
-        caller has genuinely co-located the key (repartition) — the
-        optimization skips the exchange, never changes the fold."""
-        import pandas as pd
-
-        from gg2rdf_spark.operators.grouped import stream_groups
-
-        rows = [(f"k{i % 17:02d}", i) for i in range(500)]
-        df = spark.createDataFrame(rows, "k string, v int")
-
-        def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-            # order-sensitive fold: concatenating sorted v values makes
-            # a split group produce a DIFFERENT string, so co-location
-            # violations cannot cancel out
-            vs = ",".join(str(v) for v in sorted(pdf["v"]))
-            return pd.DataFrame({"k": [pdf["k"].iloc[0]], "folded": [vs]})
-
-        schema = "k string, folded string"
-        base = {
-            (r.k, r.folded)
-            for r in stream_groups(df, "k", agg, schema).collect()
-        }
-        pre = {
-            (r.k, r.folded)
-            for r in stream_groups(
-                df.repartition(8, "k"), "k", agg, schema,
-                pre_partitioned=True).collect()
-        }
-        assert base == pre and len(base) == 17
-
-    def test_pipeline_triples_invariant_to_mention_layout_gate(self, spark):
-        """The mention-cache partition gate (small vs at-scale regime)
-        is pure physical layout: forcing each side must hash-equal."""
-        from gg2rdf_spark.pipeline import KGPipeline
-
-        tr = self._transcripts(spark).persist()
-        tr.count()
-        conf = spark.conf
-        key = "spark.gg2rdf.mentionPartitionMaxRows"
-        try:
-            conf.set(key, "1")  # force the at-scale (unpartitioned) path
-            a = sorted(map(tuple, KGPipeline(tr).triples().collect()))
-            conf.set(key, "1000000000")  # force the partitioned path
-            b = sorted(map(tuple, KGPipeline(tr).triples().collect()))
-        finally:
-            conf.unset(key)
-        assert a == b and len(a) > 100
-        tr.unpersist()
-
     def test_pipeline_triples_cached_equals_uncached(self, spark):
-        """cache=True (co-partitioned persisted frames, skipped
-        width-control repartitions, pre_partitioned fold) vs
-        cache=False (the streaming per-batch path with every explicit
-        repartition) — identical triples."""
+        """cache=True (the persisted per-conversation frame, bulk jobs)
+        vs cache=False (the streaming per-batch path) — identical
+        triples."""
         from gg2rdf_spark.pipeline import KGPipeline
 
         tr = self._transcripts(spark).persist()
@@ -812,3 +806,14 @@ class TestRound6Layout:
         b = sorted(map(tuple, KGPipeline(tr, cache=False).triples().collect()))
         assert a == b and len(a) > 100
         tr.unpersist()
+
+    def test_empty_transcripts(self, spark):
+        """An empty input gives three empty outputs on both paths."""
+        from gg2rdf_spark.pipeline import KGPipeline
+
+        tr = self._transcripts(spark).limit(0)
+        for cache in (True, False):
+            pipe = KGPipeline(tr, cache=cache)
+            assert [pipe.triples().count(), pipe.status().count(),
+                    pipe.turtle().count()] == [0, 0, 0]
+            pipe.kg.unpersist()

@@ -52,6 +52,15 @@ class TestSnapshotStore:
         assert ss.read_triples(spark, root).count() == t.count()
         assert ss.current_version(root) == r1["version"]
 
+    def test_empty_append_publishes_no_version(self, spark, tmp_path):
+        root = str(tmp_path / "st")
+        ss.commit_append(_triples(spark), root, run_id="r1")
+        v = ss.current_version(root)
+        r = ss.commit_append(_triples(spark).limit(0), root, run_id="r2")
+        assert r["n_triples"] == 0
+        assert ss.current_version(root) == v
+        assert ss.read_triples(spark, root).count() == 200
+
     def test_crash_before_commit_is_invisible(self, spark, tmp_path):
         root = str(tmp_path / "st")
         ss.commit_append(_triples(spark, tag="base"), root, n_buckets=8)

@@ -11,7 +11,7 @@ corpus, and the reference's own example XML."""
 import pytest
 
 from gg2rdf_spark.functions.ttl_check import validate_turtle
-from gg2rdf_spark.operators.serialize import PREFIX_HEADER
+from gg2rdf_spark.refimpl import PREFIX_HEADER
 
 
 class TestValidator:
