@@ -1,39 +1,33 @@
-"""Driver contract: flagship entry, per-operator queries + DuckDB oracles.
+"""Driver contract: flagship entry, the KG queries and their DuckDB oracles.
 
-Query families (SURVEY.md §2 rows in brackets):
+Query families:
 
-* ``kg_*`` — the KG-construction pipeline over the transcripts corpus
-  derived from ``documents`` by the engine-portable SQL in
+* ``kg_*`` and ``ttl_validate`` — the KG build over the transcripts
+  corpus derived from ``documents`` by the engine-portable SQL in
   ``gg2rdf_spark.sources.synthsql`` (the SAME SQL runs on DuckDB, so
   oracles reconstruct expected values independently from the pick
   arithmetic — ground truth, not a parallel parser).
-* ``rel_*`` / ``tpch_*`` — the generic relational primitives the
-  pipeline is built from [B1, D1, D3-D6, E1-E3, C5, G1].
-* ``dedup_* / ann_* / text_* / mm_*`` — training-data pipeline
-  operators (exact + MinHash-LSH + SimHash + n-gram Jaccard +
-  embedding near-dup; brute-force & LSH ANN; language-id, quality,
-  tokens, fingerprints; multimodal metadata/frame plumbing).
-* ``canon_* / linking_*`` — canonicalization CC + entity-link joins.
+* ``canon_cc`` / ``linking_join`` — canonicalization CC and the
+  entity-link join.
+* ``materialize_delete`` / ``snapshot_*`` — the two triple sinks:
+  resume, delete, replay and incremental reads.
 
-Column names are aligned pairwise (driver hashes values under sorted
-column names).  Money/centroid sums go through DECIMAL to be
-bit-deterministic across engines; cosine scores are rounded after an
-order-deterministic fold.
+Column names are aligned pairwise (the driver hashes values under
+sorted column names).  Every query has an exact oracle.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gg2rdf_spark.sources.synthsql import transcripts_sql, pick_sql, recipe_cte
+from gg2rdf_spark.sources import kgoracle
+from gg2rdf_spark.sources.synthsql import recipe_cte, transcripts_sql
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "customer"]
 
 
 def _load(spark: SparkSession, sf_dir: str, *names: str) -> None:
@@ -101,18 +95,6 @@ def _q_kg_mentions_by_kind(spark, sf_dir):
     return m.groupBy("kind").agg(F.count("*").alias("n"))
 
 
-def _q_kg_treatment_taxon(spark, sf_dir):
-    from gg2rdf_spark.operators.extract import parse_mentions, treatment_taxon
-
-    tt = treatment_taxon(parse_mentions(_transcripts(spark, sf_dir)))
-    return tt.select(
-        "conv_id",
-        F.col("tt_attrs")["genus"].alias("genus"),
-        F.col("tt_attrs")["species"].alias("species"),
-        F.col("tt_attrs")["rank"].alias("rank"),
-    )
-
-
 def _q_kg_triples_by_pred(spark, sf_dir):
     t = _pipeline(spark, sf_dir).triples()
     return t.groupBy("pred").agg(F.count("*").alias("n"))
@@ -143,269 +125,6 @@ def _q_ttl_validate(spark, sf_dir):
             })
 
     return pipe.turtle().mapInPandas(gen, "conv_id string, n_errors int")
-
-
-# ---- relational primitives -------------------------------------------------
-
-
-def _q_rel_filter_project(spark, sf_dir):  # B1/B2
-    _load(spark, sf_dir, "events")
-    return (
-        spark.table("events")
-        .filter((F.col("event_type") == "error") & (F.col("value") > 5))
-        .select("event_id", "user_id", F.round("value", 2).alias("value"))
-    )
-
-
-def _q_rel_group_accumulate(spark, sf_dir):  # D1/D2/E2
-    _load(spark, sf_dir, "lineitem")
-    return (
-        spark.table("lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.array_join(
-                F.sort_array(F.collect_set("l_returnflag")), ","
-            ).alias("flags"),
-            F.count("*").alias("n_lines"),
-        )
-    )
-
-
-def _q_rel_window_precedence(spark, sf_dir):  # D3
-    from pyspark.sql import Window
-
-    _load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        "ts", "event_id"
-    )
-    return (
-        spark.table("events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id")
-    )
-
-
-def _q_rel_anti_join(spark, sf_dir):  # D4
-    _load(spark, sf_dir, "customer", "orders")
-    c = spark.table("customer")
-    o = spark.table("orders").filter(F.col("o_totalprice") > 400000)
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-def _q_rel_classify_join(spark, sf_dir):  # D5
-    _load(spark, sf_dir, "orders", "lineitem")
-    j = spark.table("lineitem").join(
-        spark.table("orders"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    cls = (
-        F.when((F.col("l_discount") > 0.05) & (F.col("o_totalprice") > 100000),
-               "big_discounted")
-        .when(F.col("l_discount") > 0.05, "discounted")
-        .when(F.col("o_totalprice") > 100000, "big")
-        .otherwise("other")
-    )
-    return j.groupBy(cls.alias("cls")).agg(F.count("*").alias("n"))
-
-
-def _q_rel_broadcast_lookup(spark, sf_dir):  # D6
-    _load(spark, sf_dir, "nation", "region")
-    return (
-        spark.table("nation")
-        .join(F.broadcast(spark.table("region")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name").agg(F.count("*").alias("n_nations"))
-    )
-
-
-def _q_rel_sort_rank(spark, sf_dir):  # E1/E3 — computed sort keys
-    from pyspark.sql import Window
-
-    _load(spark, sf_dir, "part")
-    key = (
-        F.when(F.col("p_type").startswith("STANDARD"), 0)
-        .when(F.col("p_type").startswith("SMALL"), 1)
-        .otherwise(2)
-    )
-    w = Window.orderBy(key.asc(), F.col("p_name").asc(),
-                       F.col("p_partkey").asc())
-    return spark.table("part").select(
-        "p_partkey", F.row_number().over(w).alias("rank")
-    )
-
-
-def _q_rel_unpivot(spark, sf_dir):  # C5 — stack/melt to (pred, obj)
-    _load(spark, sf_dir, "part")
-    return spark.table("part").select(
-        "p_partkey",
-        F.expr(
-            "stack(3, 'brand', p_brand, 'type', p_type, "
-            "'size', cast(p_size as string)) as (pred, obj)"
-        ),
-    )
-
-
-def _q_rel_status_max(spark, sf_dir):  # G1 — severity max aggregate
-    _load(spark, sf_dir, "events")
-    sev = (
-        F.when(F.col("event_type") == "error", 2)
-        .when(F.col("event_type") == "purchase", 1)
-        .otherwise(0)
-    )
-    return (
-        spark.table("events")
-        .groupBy("user_id")
-        .agg(F.max(sev).alias("status"))
-    )
-
-
-# Money sums are emitted as exact bigint MICRO-units: decimal sums are
-# bit-identical across engines, but their client renderings are not
-# (Spark collect → Decimal('…000000'), DuckDB .df() → float64), so the
-# driver's stringified value hash diverges on representation alone.
-# (sum * 1e6) of a scale-6 decimal is an exact integer — hash-stable.
-
-
-def _q_tpch_q1(spark, sf_dir):
-    _load(spark, sf_dir, "lineitem")
-    li = spark.table("lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2024-09-01")
-    )
-    d = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-
-    def mu(x):
-        return (x.cast("decimal(38,6)") * 1000000).cast("long")
-
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            mu(F.sum(d("l_quantity"))).alias("sum_qty_micros"),
-            mu(F.sum(d("l_extendedprice"))).alias("sum_base_micros"),
-            mu(F.sum((d("l_extendedprice") * (F.lit(1).cast("decimal(18,6)")
-               - d("l_discount"))))).alias("sum_disc_micros"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def _q_tpch_q3(spark, sf_dir):
-    _load(spark, sf_dir, "customer", "orders", "lineitem")
-    d = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-    j = (
-        spark.table("customer").filter(F.col("c_mktsegment") == "BUILDING")
-        .join(spark.table("orders"),
-              F.col("c_custkey") == F.col("o_custkey"))
-        .join(spark.table("lineitem"),
-              F.col("o_orderkey") == F.col("l_orderkey"))
-    )
-    return (
-        j.groupBy("o_orderkey")
-        .agg((F.sum(d("l_extendedprice") * (F.lit(1).cast("decimal(18,6)")
-                                            - d("l_discount")))
-              .cast("decimal(38,6)") * 1000000).cast("long")
-             .alias("revenue_micros"))
-        .orderBy(F.desc("revenue_micros"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-# ---- datapipe --------------------------------------------------------------
-
-
-def _q_dedup_exact(spark, sf_dir):
-    from gg2rdf_spark.datapipe.dedup import exact_dedup
-
-    _load(spark, sf_dir, "documents")
-    return exact_dedup(spark.table("documents"))
-
-
-def _q_dedup_minhash_lsh(spark, sf_dir):
-    from gg2rdf_spark.datapipe.dedup import minhash_lsh_pairs
-
-    _load(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(spark.table("documents"))
-
-
-def _q_dedup_simhash(spark, sf_dir):
-    from gg2rdf_spark.datapipe.dedup import simhash64
-
-    _load(spark, sf_dir, "documents")
-    return simhash64(spark.table("documents"))
-
-
-def _q_dedup_ngram_jaccard(spark, sf_dir):
-    from gg2rdf_spark.datapipe.dedup import ngram_jaccard_pairs
-
-    _load(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(spark.table("documents"))
-
-
-def _q_neardup_embedding(spark, sf_dir):
-    from gg2rdf_spark.datapipe.dedup import embedding_neardup_pairs
-
-    _load(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(spark.table("embeddings"), threshold=0.3)
-
-
-def _q_ann_bruteforce(spark, sf_dir):
-    from gg2rdf_spark.datapipe.ann import brute_force_topk
-
-    _load(spark, sf_dir, "embeddings")
-    emb = spark.table("embeddings")
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
-def _q_ann_lsh(spark, sf_dir):
-    from gg2rdf_spark.datapipe.ann import lsh_bucketed_topk
-
-    _load(spark, sf_dir, "embeddings")
-    emb = spark.table("embeddings")
-    return lsh_bucketed_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
-def _q_text_langid(spark, sf_dir):
-    from gg2rdf_spark.datapipe.text import language_id
-
-    _load(spark, sf_dir, "documents")
-    return language_id(spark.table("documents"))
-
-
-def _q_text_quality(spark, sf_dir):
-    from gg2rdf_spark.datapipe.text import quality_score
-
-    _load(spark, sf_dir, "documents")
-    return quality_score(spark.table("documents"))
-
-
-def _q_text_tokens(spark, sf_dir):
-    from gg2rdf_spark.datapipe.text import token_stats
-
-    _load(spark, sf_dir, "documents")
-    return token_stats(spark.table("documents"))
-
-
-def _q_text_fingerprint(spark, sf_dir):
-    from gg2rdf_spark.datapipe.text import fingerprint
-
-    _load(spark, sf_dir, "documents")
-    return fingerprint(spark.table("documents"))
-
-
-def _q_mm_metadata(spark, sf_dir):
-    from gg2rdf_spark.datapipe.multimodal import attach_fake_media, media_metadata
-
-    _load(spark, sf_dir, "documents")
-    return media_metadata(attach_fake_media(spark.table("documents")))
-
-
-def _q_mm_frames(spark, sf_dir):
-    from gg2rdf_spark.datapipe.multimodal import attach_fake_media, sample_frames
-
-    _load(spark, sf_dir, "documents")
-    return sample_frames(attach_fake_media(spark.table("documents")))
 
 
 # ---- canonicalization / linking -------------------------------------------
@@ -460,6 +179,19 @@ FROM documents
 _MAT_DELETE_CONVS = ["c7", "c23", "c42", "c99", "c150"]
 
 
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` exists: signal 0 checks without
+    delivering anything.  A process of another user answers EPERM, and
+    is alive too."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
 def _scratch_dir(name: str) -> str:
     """Fixed per-query scratch sink, emptied at entry.  mkdtemp-per-call
     leaked a full parquet sink per invocation (the returned frame
@@ -473,7 +205,6 @@ def _scratch_dir(name: str) -> str:
     bench and a correctness run — rmtree each other's live sinks).
     Scratch of dead sibling processes under the same uid is reclaimed
     here, keeping the bounded-disk property across runs."""
-    import os
     import shutil
     import tempfile
 
@@ -482,8 +213,7 @@ def _scratch_dir(name: str) -> str:
     os.makedirs(root, exist_ok=True)
     for d in os.listdir(root):  # GC dirs left by exited drivers
         pid = d[1:]
-        if d.startswith("p") and pid.isdigit() \
-                and not os.path.exists(f"/proc/{pid}"):
+        if d.startswith("p") and pid.isdigit() and not _alive(int(pid)):
             shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     p = os.path.join(root, f"p{os.getpid()}", name)
     shutil.rmtree(p, ignore_errors=True)
@@ -621,62 +351,15 @@ GROUP BY conv_id
 """
 
 
-def _q_event_window_agg(spark, sf_dir):  # streaming-analog tumbling window
-    _load(spark, sf_dir, "events")
-    return (
-        spark.table("events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            (F.sum(F.col("value").cast("decimal(18,6)"))
-             .cast("decimal(38,6)") * 1000000).cast("long")
-            .alias("sum_value_micros"),
-        )
-        # string-render the hour so both engines hash identical bytes
-        # (datetime64[ns] vs [us] client types otherwise)
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss")
-            .alias("hour_start"),
-            "event_type", "n", "sum_value_micros",
-        )
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "kg_transcripts": _q_kg_transcripts,
         "kg_mentions_by_kind": _q_kg_mentions_by_kind,
-        "kg_treatment_taxon": _q_kg_treatment_taxon,
         "kg_triples_by_pred": _q_kg_triples_by_pred,
         "kg_status_counts": _q_kg_status_counts,
         "ttl_validate": _q_ttl_validate,
-        "rel_filter_project": _q_rel_filter_project,
-        "rel_group_accumulate": _q_rel_group_accumulate,
-        "rel_window_precedence": _q_rel_window_precedence,
-        "rel_anti_join": _q_rel_anti_join,
-        "rel_classify_join": _q_rel_classify_join,
-        "rel_broadcast_lookup": _q_rel_broadcast_lookup,
-        "rel_sort_rank": _q_rel_sort_rank,
-        "rel_unpivot": _q_rel_unpivot,
-        "rel_status_max": _q_rel_status_max,
-        "tpch_q1": _q_tpch_q1,
-        "tpch_q3": _q_tpch_q3,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_minhash_lsh": _q_dedup_minhash_lsh,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "neardup_embedding": _q_neardup_embedding,
-        "ann_bruteforce": _q_ann_bruteforce,
-        "ann_lsh": _q_ann_lsh,
-        "text_langid": _q_text_langid,
-        "text_quality": _q_text_quality,
-        "text_tokens": _q_text_tokens,
-        "text_fingerprint": _q_text_fingerprint,
-        "mm_metadata": _q_mm_metadata,
-        "mm_frames": _q_mm_frames,
         "canon_cc": _q_canon_cc,
         "linking_join": _q_linking_join,
-        "event_window_agg": _q_event_window_agg,
         "materialize_delete": _q_materialize_delete,
         "snapshot_delete": _q_snapshot_delete,
         "snapshot_incremental": _q_snapshot_incremental,
@@ -686,289 +369,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 # DuckDB oracles
 # ---------------------------------------------------------------------------
-
-_H32 = "cast(('0x'||substr(md5({0}),1,8)) as bigint)"
-_TOKS = (
-    "string_split_regex(trim(regexp_replace(lower({0}),'[^a-z0-9]+',' ','g')),"
-    " ' ')"
-)
-
-_STOP_EN = "['the','a','and','of','to','in','is','on','for','with']"
-_STOP_DE = "['der','die','das','und','ist','von','mit','auf','ein','zu']"
-_STOP_FR = "['le','la','les','et','de','un','une','est','dans','pour']"
-
-
-def _shingle_cte(n: int, table: str = "documents",
-                 id_col: str = "doc_id") -> str:
-    """toks → n-gram shingle rows (lead-window based)."""
-    grams = " || ' ' || ".join(
-        ["t"] + [f"lead(t,{i}) over w" for i in range(1, n)]
-    )
-    return f"""
-toks AS (
-  SELECT id, t, ord FROM (
-    SELECT {id_col} AS id,
-           unnest({_TOKS.format('text')}) AS t,
-           generate_subscripts({_TOKS.format('text')}, 1) AS ord
-    FROM {table})
-),
-sh_raw AS (
-  SELECT id, {grams} AS s
-  FROM toks WINDOW w AS (PARTITION BY id ORDER BY ord)
-),
-sh AS (SELECT DISTINCT id, s FROM sh_raw WHERE s IS NOT NULL)
-"""
-
-
-def _minhash_oracle() -> str:
-    k, bands, rpb = 16, 4, 4
-    mins = ", ".join(
-        f"min(({1_000_003 + 2 * i} * h + {12_345 + i}) % 2147483647) AS mh{i}"
-        for i in range(k)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT id, '{b}_' || {sig} AS band_sig FROM sig".format(
-            b=b,
-            sig=" || '_' || ".join(
-                f"cast(mh{b * rpb + r} as varchar)" for r in range(rpb)
-            ),
-        )
-        for b in range(bands)
-    )
-    return f"""
-WITH {_shingle_cte(3)},
-h AS (SELECT id, s, {_H32.format('s')} AS h FROM sh),
-sig AS (SELECT id, {mins} FROM h GROUP BY id),
-banded AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band_sig = b.band_sig AND a.id < b.id
-),
-jac AS (
-  SELECT c.id_a, c.id_b,
-    (SELECT count(*) FROM sh x JOIN sh y ON x.s = y.s
-      WHERE x.id = c.id_a AND y.id = c.id_b) AS inter,
-    (SELECT count(*) FROM sh WHERE id = c.id_a) AS na,
-    (SELECT count(*) FROM sh WHERE id = c.id_b) AS nb
-  FROM cand c
-)
-SELECT id_a, id_b,
-       round(cast(inter as double) / (na + nb - inter), 6) AS jaccard
-FROM jac WHERE cast(inter as double) / (na + nb - inter) >= 0.5
-"""
-
-
-def _simhash_oracle() -> str:
-    votes = ", ".join(
-        (
-            f"sum(CASE WHEN (h1 // {2 ** j}) % 2 = 1 THEN 1 ELSE -1 END) AS v{j}"
-            if j < 32
-            else f"sum(CASE WHEN (h2 // {2 ** (j - 32)}) % 2 = 1 THEN 1 ELSE -1 END) AS v{j}"
-        )
-        for j in range(64)
-    )
-    sig = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN cast({2 ** j} as bigint) ELSE 0 END)"
-        for j in range(63)
-    )
-    return f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id AS id, unnest({_TOKS.format('text')}) AS t
-  FROM documents
-),
-h AS (
-  SELECT id, {_H32.format('t')} AS h1,
-         cast(('0x'||substr(md5(t),9,8)) as bigint) AS h2
-  FROM toks
-),
-voted AS (SELECT id, {votes} FROM h GROUP BY id)
-SELECT id, {sig} AS simhash FROM voted
-"""
-
-
-def _ngram_jaccard_oracle() -> str:
-    return f"""
-WITH {_shingle_cte(2)},
-base AS (
-  SELECT doc_id AS id,
-         len({_TOKS.format('text')}) AS n_toks,
-         {_TOKS.format('text')}[1] AS tok0
-  FROM documents
-),
-blocks AS (
-  SELECT id, (n_toks // 10) AS len_bucket, tok0 FROM base
-),
-cand AS (
-  SELECT a.id AS id_a, b.id AS id_b
-  FROM blocks a JOIN blocks b
-    ON a.len_bucket = b.len_bucket AND a.tok0 = b.tok0 AND a.id < b.id
-),
-jac AS (
-  SELECT c.id_a, c.id_b,
-    (SELECT count(*) FROM sh x JOIN sh y ON x.s = y.s
-      WHERE x.id = c.id_a AND y.id = c.id_b) AS inter,
-    (SELECT count(*) FROM sh WHERE id = c.id_a) AS na,
-    (SELECT count(*) FROM sh WHERE id = c.id_b) AS nb
-  FROM cand c
-)
-SELECT id_a, id_b,
-       round(cast(inter as double)/(na + nb - inter), 6) AS jaccard
-FROM jac WHERE cast(inter as double)/(na + nb - inter) >= 0.3
-"""
-
-
-_DOT = (
-    "list_sum(list_transform(list_zip(a.v, b.v), "
-    "x -> cast(x[1] as double) * cast(x[2] as double)))"
-)
-_NORM = (
-    "sqrt(list_sum(list_transform({0}, x -> cast(x as double)"
-    " * cast(x as double))))"
-)
-
-
-def _neardup_embedding_oracle() -> str:
-    return f"""
-WITH base AS (
-  SELECT vec_id AS id, label AS blk, embedding AS v,
-         {_NORM.format('embedding')} AS nrm
-  FROM embeddings
-)
-SELECT a.id AS id_a, b.id AS id_b,
-       round({_DOT} / (a.nrm * b.nrm), 6) AS cosine
-FROM base a JOIN base b ON a.blk = b.blk AND a.id < b.id
-WHERE {_DOT} / (a.nrm * b.nrm) >= 0.3
-"""
-
-
-def _ann_bruteforce_oracle() -> str:
-    return f"""
-WITH corpus AS (
-  SELECT vec_id AS cid, embedding AS v, {_NORM.format('embedding')} AS nrm
-  FROM embeddings
-),
-q AS (SELECT cid AS qid, v, nrm FROM corpus WHERE cid < 10),
-scored AS (
-  SELECT q.qid, c.cid,
-         list_sum(list_transform(list_zip(q.v, c.v),
-           x -> cast(x[1] as double) * cast(x[2] as double)))
-         / (q.nrm * c.nrm) AS cosine
-  FROM corpus c JOIN q ON q.qid <> c.cid
-),
-ranked AS (
-  SELECT qid, cid, cosine,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, cid ASC) AS rank
-  FROM scored
-)
-SELECT qid, cid, round(cosine, 6) AS cosine, rank
-FROM ranked WHERE rank <= 5
-"""
-
-
-def _ann_lsh_oracle(k: int = 5, n_bits: int = 4, n_tables: int = 8) -> str:
-    """Exact replica of datapipe/ann.py::lsh_bucketed_topk — the sign
-    planes are deterministic dimension-group sums (plane j of table t =
-    sign of Σ v[i] over i ≡ t*n_bits+j mod n_bits*n_tables), so DuckDB
-    reconstructs the same buckets, multiprobe set, and exact-cosine
-    ranking with no RNG involved.
-
-    Determinism is by construction (round-2 ADVICE): both engines
-    quantize each dimension to int64 (round(x·10⁶)) before summing —
-    exact integer arithmetic, no accumulation-order sensitivity.
-    Scope: this replica proves CROSS-ENGINE DETERMINISM of the whole
-    LSH→probe→rank dataflow; retrieval QUALITY is gated separately by
-    tests/test_operators.py::TestANN (recall ≥0.9 vs brute force and
-    containment of every returned pair in brute-force top-3k)."""
-    groups = n_bits * n_tables
-    # per-vector group sums over quantized int64 dims (exact)
-    gsum = (
-        "list_sum(list_transform(list_zip(v, range(0, len(v))), "
-        "x -> CASE WHEN cast(x[2] as int) % {groups} = {g} "
-        "THEN cast(round(cast(x[1] as double) * 1000000) as bigint) "
-        "ELSE cast(0 as bigint) END))"
-    )
-    buckets = ", ".join(
-        "("
-        + " + ".join(
-            f"(CASE WHEN {gsum.format(groups=groups, g=t * n_bits + j)} > 0 "
-            f"THEN {1 << j} ELSE 0 END)"
-            for j in range(n_bits)
-        )
-        + f") AS b{t}"
-        for t in range(n_tables)
-    )
-    bkt_rows = " UNION ALL ".join(
-        f"SELECT id, {t} AS t, b{t} AS b FROM sig" for t in range(n_tables)
-    )
-    probe_rows = " UNION ".join(
-        [f"SELECT id AS qid, t, b FROM bkt WHERE id < 10"]
-        + [
-            f"SELECT id, t, xor(b, {1 << j}) FROM bkt WHERE id < 10"
-            for j in range(n_bits)
-        ]
-    )
-    return f"""
-WITH base AS (
-  SELECT vec_id AS id, embedding AS v, {_NORM.format('embedding')} AS nrm
-  FROM embeddings
-),
-sig AS (SELECT id, {buckets} FROM (SELECT id, v FROM base)),
-bkt AS ({bkt_rows}),
-probes AS ({probe_rows}),
-cand AS (
-  SELECT DISTINCT p.qid, c.id AS cid
-  FROM probes p JOIN bkt c ON c.t = p.t AND c.b = p.b
-  WHERE c.id <> p.qid
-),
-scored AS (
-  SELECT cand.qid, cand.cid,
-         list_sum(list_transform(list_zip(a.v, b.v),
-           x -> cast(x[1] as double) * cast(x[2] as double)))
-         / (a.nrm * b.nrm) AS cosine
-  FROM cand JOIN base a ON a.id = cand.qid JOIN base b ON b.id = cand.cid
-),
-ranked AS (
-  SELECT qid, cid, cosine,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, cid ASC) AS rank
-  FROM scored
-)
-SELECT qid, cid, round(cosine, 6) AS cosine, rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def _mm_chain(n: int) -> list[str]:
-    out, cur = [], "md5(text)"
-    for _ in range(n):
-        out.append(cur)
-        cur = f"md5({cur})"
-    return out
-
-
-def _mm_metadata_oracle() -> str:
-    chain = _mm_chain(8)
-    concat = " || ".join(chain)
-    return f"""
-SELECT doc_id AS id, 'video/fake' AS media_type,
-       128 AS n_bytes,
-       md5(upper({concat})) AS checksum,
-       8 AS n_frames
-FROM documents
-"""
-
-
-def _mm_frames_oracle() -> str:
-    chain = _mm_chain(8)
-    concat = " || ".join(chain)
-    return f"""
-SELECT doc_id AS id, f.frame_idx,
-       md5(substr({concat}, f.frame_idx * 32 + 1, 32)) AS frame_checksum
-FROM documents
-CROSS JOIN (VALUES (0), (2), (4), (6)) AS f(frame_idx)
-"""
 
 
 def _kg_mentions_oracle() -> str:
@@ -989,218 +389,29 @@ SELECT kind, cast(n as bigint) AS n FROM (
 """
 
 
-def _kg_treatment_taxon_oracle() -> str:
-    return f"""
-WITH r AS ({recipe_cte('documents')})
-SELECT conv_id,
-  (CASE WHEN err = 4 THEN 'T.' ELSE g END) AS genus,
-  (CASE WHEN err = 2 THEN '6 ' || sp || '?' ELSE sp END) AS species,
-  (CASE WHEN err = 3 THEN NULL ELSE 'species' END) AS rank
-FROM r WHERE err <> 1
-"""
-
-
-def _linking_oracle() -> str:
-    return f"""
-WITH r AS ({recipe_cte('documents')})
-SELECT conv_id,
-  lower(g || ' ' || sp) AS name_key,
-  'http://taxon-name.plazi.org/id/Animalia/' || g || '_' || sp AS entity_id,
-  1.0 AS score
-FROM r WHERE err NOT IN (1, 2, 4)
-"""
+# perfbench's link check imports the oracle under this name
+_linking_oracle = kgoracle.linking_sql
 
 
 def oracle_sql() -> dict[str, str]:
-    sqls: dict[str, str] = {}
-
-    sqls["kg_transcripts"] = transcripts_sql("documents", dialect="duckdb")
-    sqls["kg_mentions_by_kind"] = _kg_mentions_oracle()
-    sqls["kg_treatment_taxon"] = _kg_treatment_taxon_oracle()
-    # Full-pipeline outputs, reconstructed in recipe SQL (the corpus is
-    # itself SQL-generated, so per-pred counts and per-conv status are
-    # deterministic functions of the same picks — kgoracle.py rebuilds
-    # every emission site + Set dedup relationally, fit per-conv exact
-    # against the serial reference-semantics oracle at sf0.01 AND sf0.1)
-    from gg2rdf_spark.sources.kgoracle import (
-        kg_status_counts_sql, kg_triples_by_pred_sql,
-    )
-    sqls["kg_triples_by_pred"] = kg_triples_by_pred_sql()
-    sqls["kg_status_counts"] = kg_status_counts_sql()
-    from gg2rdf_spark.sources.kgoracle import kg_ttl_convs_sql
-    sqls["ttl_validate"] = kg_ttl_convs_sql()
-
-    sqls["rel_filter_project"] = """
-SELECT event_id, user_id, round(value, 2) AS value
-FROM events WHERE event_type = 'error' AND value > 5
-"""
-    sqls["rel_group_accumulate"] = """
-SELECT l_orderkey,
-       list_aggregate(list_sort(list_distinct(list(l_returnflag))),
-                      'string_agg', ',') AS flags,
-       count(*) AS n_lines
-FROM lineitem GROUP BY l_orderkey
-"""
-    sqls["rel_window_precedence"] = """
-SELECT user_id, event_type, event_id FROM (
-  SELECT user_id, event_type, event_id,
-         row_number() OVER (PARTITION BY user_id, event_type
-                            ORDER BY ts, event_id) AS rn
-  FROM events) WHERE rn = 1
-"""
-    sqls["rel_anti_join"] = """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey NOT IN
-  (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
-"""
-    sqls["rel_classify_join"] = """
-SELECT cls, count(*) AS n FROM (
-  SELECT CASE
-    WHEN l_discount > 0.05 AND o_totalprice > 100000 THEN 'big_discounted'
-    WHEN l_discount > 0.05 THEN 'discounted'
-    WHEN o_totalprice > 100000 THEN 'big'
-    ELSE 'other' END AS cls
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-) GROUP BY cls
-"""
-    sqls["rel_broadcast_lookup"] = """
-SELECT r_name, count(*) AS n_nations
-FROM nation JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-    sqls["rel_sort_rank"] = """
-SELECT p_partkey, row_number() OVER (ORDER BY
-  (CASE WHEN p_type LIKE 'STANDARD%' THEN 0
-        WHEN p_type LIKE 'SMALL%' THEN 1 ELSE 2 END),
-  p_name, p_partkey) AS rank
-FROM part
-"""
-    sqls["rel_unpivot"] = """
-SELECT p_partkey, 'brand' AS pred, p_brand AS obj FROM part
-UNION ALL SELECT p_partkey, 'type', p_type FROM part
-UNION ALL SELECT p_partkey, 'size', cast(p_size as varchar) FROM part
-"""
-    sqls["rel_status_max"] = """
-SELECT user_id, max(CASE WHEN event_type = 'error' THEN 2
-                         WHEN event_type = 'purchase' THEN 1
-                         ELSE 0 END) AS status
-FROM events GROUP BY user_id
-"""
-    sqls["tpch_q1"] = """
-SELECT l_returnflag, l_linestatus,
-  cast(cast(sum(cast(l_quantity as decimal(18,6))) as decimal(38,6))
-       * 1000000 as bigint) AS sum_qty_micros,
-  cast(cast(sum(cast(l_extendedprice as decimal(18,6))) as decimal(38,6))
-       * 1000000 as bigint) AS sum_base_micros,
-  cast(cast(sum(cast(l_extendedprice as decimal(18,6))
-       * (cast(1 as decimal(18,6)) - cast(l_discount as decimal(18,6))))
-       as decimal(38,6)) * 1000000 as bigint) AS sum_disc_micros,
-  count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '2024-09-01'
-GROUP BY l_returnflag, l_linestatus
-"""
-    sqls["tpch_q3"] = """
-SELECT o_orderkey,
-  cast(cast(sum(cast(l_extendedprice as decimal(18,6))
-       * (cast(1 as decimal(18,6)) - cast(l_discount as decimal(18,6))))
-       as decimal(38,6)) * 1000000 as bigint) AS revenue_micros
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey
-ORDER BY revenue_micros DESC, o_orderkey ASC
-LIMIT 10
-"""
-    sqls["dedup_exact"] = """
-SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-       count(*) AS n_dups
-FROM documents GROUP BY md5(text)
-"""
-    sqls["dedup_minhash_lsh"] = _minhash_oracle()
-    sqls["dedup_simhash"] = _simhash_oracle()
-    sqls["dedup_ngram_jaccard"] = _ngram_jaccard_oracle()
-    sqls["neardup_embedding"] = _neardup_embedding_oracle()
-    sqls["ann_bruteforce"] = _ann_bruteforce_oracle()
-    # ann_lsh: the LSH is deterministic (no RNG) — exact-replica oracle;
-    # recall vs brute force is additionally asserted in pytest
-    sqls["ann_lsh"] = _ann_lsh_oracle()
-
-    sqls["text_langid"] = f"""
-WITH base AS (
-  SELECT doc_id AS id, list_distinct({_TOKS.format('text')}) AS t
-  FROM documents
-),
-scored AS (
-  SELECT id,
-    len(list_intersect(t, {_STOP_EN})) AS en,
-    len(list_intersect(t, {_STOP_DE})) AS de,
-    len(list_intersect(t, {_STOP_FR})) AS fr
-  FROM base
-)
-SELECT id, en, de, fr,
-  CASE WHEN en >= de AND en >= fr AND en > 0 THEN 'en'
-       WHEN de >= fr AND de > 0 THEN 'de'
-       WHEN fr > 0 THEN 'fr' ELSE 'und' END AS lang_guess
-FROM scored
-"""
-    sqls["text_quality"] = f"""
-WITH base AS (
-  SELECT doc_id AS id, text, {_TOKS.format('text')} AS toks
-  FROM documents
-),
-m AS (
-  SELECT id,
-    length(text) AS n_chars,
-    len(toks) AS n_tokens,
-    length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-      AS n_punct,
-    len(list_intersect(list_distinct(toks), {_STOP_EN})) AS stop_types,
-    cast(list_sum(list_transform(toks, t -> length(t))) as double)
-      / len(toks) AS mean_word
-  FROM base
-)
-SELECT id, n_chars, n_tokens,
-  round(cast(n_punct as double) / n_chars, 6) AS punct_ratio,
-  stop_types,
-  round(mean_word, 6) AS mean_word_len,
-  round(least(n_tokens / 100.0, 1.0) * 0.4
-        + least(stop_types / 5.0, 1.0) * 0.4
-        + (CASE WHEN mean_word >= 3 AND mean_word <= 10 THEN 0.2
-                ELSE 0.0 END), 6) AS quality
-FROM m
-"""
-    sqls["text_tokens"] = """
-SELECT doc_id AS id,
-  len(string_split_regex(trim(text), '\\s+')) AS ws_tokens,
-  cast(ceil(length(regexp_replace(text, '\\s+', '', 'g')) / 4.0) as bigint)
-    AS subword_est
-FROM documents
-"""
-    sqls["text_fingerprint"] = f"""
-WITH {_shingle_cte(8)}
-SELECT id, min({_H32.format('s')}) AS fingerprint
-FROM sh GROUP BY id
-"""
-    sqls["mm_metadata"] = _mm_metadata_oracle()
-    sqls["mm_frames"] = _mm_frames_oracle()
-    sqls["canon_cc"] = """
+    return {
+        "kg_transcripts": transcripts_sql("documents", dialect="duckdb"),
+        "kg_mentions_by_kind": _kg_mentions_oracle(),
+        # Full-pipeline outputs, reconstructed in recipe SQL (the corpus
+        # is itself SQL-generated, so per-pred counts and per-conv
+        # status are deterministic functions of the same picks)
+        "kg_triples_by_pred": kgoracle.kg_triples_by_pred_sql(),
+        "kg_status_counts": kgoracle.kg_status_counts_sql(),
+        "ttl_validate": kgoracle.kg_ttl_convs_sql(),
+        "canon_cc": """
 SELECT 'n' || lpad(cast(c_custkey as varchar), 6, '0') AS node,
        'n' || lpad(cast(min(c_custkey) OVER (PARTITION BY c_custkey % 50)
                         as varchar), 6, '0') AS component
 FROM customer WHERE c_custkey >= 50 OR c_custkey IN (
   SELECT c_custkey - 50 FROM customer WHERE c_custkey >= 50)
-"""
-    sqls["linking_join"] = _linking_oracle()
-    sqls["materialize_delete"] = _materialize_delete_oracle()
-    sqls["snapshot_delete"] = _snapshot_delete_oracle()
-    sqls["snapshot_incremental"] = _snapshot_incremental_oracle()
-    sqls["event_window_agg"] = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-  event_type,
-  count(*) AS n,
-  cast(cast(sum(cast(value as decimal(18,6))) as decimal(38,6))
-       * 1000000 as bigint) AS sum_value_micros
-FROM events GROUP BY 1, 2
-"""
-    return sqls
+""",
+        "linking_join": _linking_oracle(),
+        "materialize_delete": _materialize_delete_oracle(),
+        "snapshot_delete": _snapshot_delete_oracle(),
+        "snapshot_incremental": _snapshot_incremental_oracle(),
+    }

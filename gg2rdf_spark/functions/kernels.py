@@ -294,11 +294,6 @@ REL_NONE = 2
 REL_DEPRECATES = 3
 
 
-def get_attr(attrs: Mapping[str, str], name: str) -> Optional[str]:
-    """``Element.getAttribute`` — None when absent."""
-    return attrs.get(name)
-
-
 def taxon_rank_group(attrs: Mapping[str, str]) -> int:
     """gg2rdf.ts:1212-1232 (truthy-attribute probes, top-down)."""
     if attrs.get("species"):
@@ -641,11 +636,6 @@ def authority_year(authority: str) -> str:
     """First digit run of the authority (gg2rdf.ts:485, 1066)."""
     m = _RE_FIRST_DIGITS.search(authority)
     return m.group(0) if m else ""
-
-
-def taxon_authority_suffix(authority: str) -> str:
-    """`_{authorityNameForURI}_{partialURI(year)}` (gg2rdf.ts:486-488)."""
-    return f"_{authority_name_for_uri(authority)}_{partial_uri(authority_year(authority))}"
 
 
 # --------------------------------------------------------------------------

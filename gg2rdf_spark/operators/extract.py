@@ -10,9 +10,7 @@ conv_id the exchange disappears entirely (storage-partitioned scan).
 
 The mention stream feeds entity linking (``operators/linking.py``);
 the KG engine itself parses each conversation inside its one
-per-conversation pass (``pipeline.py``).  ``treatment_taxon`` is a hash
-aggregate on ``conv_id`` — map-side partial aggregation keeps its
-shuffle conv-level (small).
+per-conversation pass (``pipeline.py``).
 """
 
 from __future__ import annotations
@@ -21,7 +19,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType, MapType, StringType, StructField, StructType,
 )
@@ -92,61 +89,4 @@ def parse_mentions(transcripts: DataFrame) -> DataFrame:
         .repartition(par, "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx")
         .mapInPandas(gen, PARSED_SCHEMA)
-    )
-
-
-def treatment_taxon(mentions: DataFrame) -> DataFrame:
-    """First nomenclature taxonomicName per conversation
-    (gg2rdf.ts:136-138) plus the taxonomicNameLabel status fallback
-    (:249-254): first label *after* the taxon in the same turn, else a
-    same-turn label whose rank matches the taxon's."""
-    tt = (
-        mentions.filter(
-            (F.col("kind") == "taxonomicName")
-            & (F.col("section") == "nomenclature")
-        )
-        .groupBy("conv_id")
-        .agg(
-            F.min_by(F.col("attrs"), F.col("g_ord")).alias("tt_attrs"),
-            F.min_by(F.col("turn_idx"), F.col("g_ord")).alias("tt_turn"),
-            F.min_by(F.col("start"), F.col("g_ord")).alias("tt_start"),
-        )
-    )
-    labels = mentions.filter(F.col("kind") == "taxonomicNameLabel").select(
-        F.col("conv_id").alias("lb_conv_id"),
-        F.col("turn_idx").alias("lb_turn"),
-        F.col("start").alias("lb_start"),
-        F.col("attrs")["rank"].alias("lb_rank"),
-        F.col("surface").alias("lb_text"),
-    )
-    joined = tt.join(
-        labels,
-        (F.col("conv_id") == F.col("lb_conv_id"))
-        & (F.col("tt_turn") == F.col("lb_turn")),
-        "left",
-    ).drop("lb_conv_id")
-    agg = joined.groupBy("conv_id", "tt_attrs", "tt_turn", "tt_start").agg(
-        F.min_by(
-            F.when(F.col("lb_start") > F.col("tt_start"), F.col("lb_text")),
-            F.when(F.col("lb_start") > F.col("tt_start"), F.col("lb_start")),
-        ).alias("label_after"),
-        F.min_by(
-            F.when(
-                F.col("lb_rank") == F.col("tt_attrs")["rank"], F.col("lb_text")
-            ),
-            F.when(
-                F.col("lb_rank") == F.col("tt_attrs")["rank"], F.col("lb_start")
-            ),
-        ).alias("label_rank"),
-    )
-    # status resolution: @status ?? sibling label ?? rank label ?? ABSENT
-    # (?? is null-coalescing: an *empty* status attribute still wins)
-    return agg.withColumn(
-        "tt_status",
-        F.coalesce(
-            F.col("tt_attrs")["status"],
-            F.col("label_after"),
-            F.when(F.col("tt_attrs")["rank"].isNotNull(), F.col("label_rank")),
-            F.lit("ABSENT"),
-        ),
     )

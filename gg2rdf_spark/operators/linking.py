@@ -14,9 +14,8 @@ normalized name key.  Join strategy:
   of one.  Results are identical to the plain join (dedup after).
 
 The dictionary itself (``entity_dictionary``) is derived
-deterministically from the corpus name pools (FIXTURES.md §2) with
-alias forms (abbreviated genus 'X. species') that feed the
-canonicalization CC stage.
+deterministically from the corpus name pools (FIXTURES.md §2) and
+lists each entity's alias forms (abbreviated genus 'X. species').
 """
 
 from __future__ import annotations
@@ -94,12 +93,4 @@ def link_mentions_salted(
     return keys.join(dict_salted, ["name_key", "salt"]).select(
         "conv_id", "turn_idx", "start", "name_key", "entity_id",
         F.lit(1.0).alias("score"),
-    )
-
-
-def alias_edges(dictionary: DataFrame) -> DataFrame:
-    """(src,dst) alias edges for the canonicalization CC stage."""
-    return dictionary.select(
-        F.col("entity_id").alias("src"),
-        F.explode("aliases").alias("dst"),
     )

@@ -118,14 +118,6 @@ def kg_triples(transcripts: DataFrame, cache: bool = True) -> DataFrame:
     return KGPipeline(transcripts, cache).triples()
 
 
-def kg_turtle(transcripts: DataFrame, cache: bool = True) -> DataFrame:
-    return KGPipeline(transcripts, cache).turtle()
-
-
-def kg_status(transcripts: DataFrame, cache: bool = True) -> DataFrame:
-    return KGPipeline(transcripts, cache).status()
-
-
 def precision_recall(
     ours: list[tuple], reference: list[tuple]
 ) -> dict[str, float]:

@@ -549,3 +549,19 @@ u AS (SELECT DISTINCT conv_id FROM
       (SELECT conv_id FROM e UNION ALL SELECT conv_id FROM auth))
 SELECT conv_id, 0 AS n_errors FROM u
 """
+
+
+def linking_sql(source: str = "documents") -> str:
+    """Expected entity links (``linking.link_mentions`` against
+    ``linking.entity_dictionary``): one exact-match row per
+    conversation whose nomenclature taxon carries a clean pool genus
+    and species.  Err 1 has no taxon; err 2 and err 4 mangle the
+    species or the genus, so their key misses the dictionary."""
+    return f"""
+WITH r AS ({recipe_cte(source)})
+SELECT conv_id,
+  lower(g || ' ' || sp) AS name_key,
+  'http://taxon-name.plazi.org/id/Animalia/' || g || '_' || sp AS entity_id,
+  1.0 AS score
+FROM r WHERE err NOT IN (1, 2, 4)
+"""

@@ -1,11 +1,9 @@
-"""Graph materialization + exact resume (north_rule stage 4, A4-A6).
+"""The bulk triple sink + exact resume (north_rule stage 4, A4-A6).
 
-Production sink shape: the triples table partitioned by ``pred`` and a
-hashed ``conv_bucket`` — the parquet-directory analog of the Iceberg
-``partitionedBy(pred, bucket(N, subj))`` layout the north_rule names
-(Iceberg jars aren't available in this environment; the writer is
-factored so an Iceberg catalog can be dropped in by replacing
-``_write`` with ``df.writeTo(...)``).
+``jobs/kg_job.py`` writes here; streaming micro-batches commit to the
+snapshot store instead (``snapshot_store.py``).  Sink shape: the
+triples table partitioned by a hashed ``conv_bucket`` — the
+parquet-directory analog of an Iceberg ``bucket(N, conv_id)`` layout.
 
 Resume semantics (≙ the reference's fileStatus.txt checkpoint,
 /root/reference/src/action_worker.ts:13-57): each run writes a
@@ -32,51 +30,23 @@ def with_bucket(triples: DataFrame, n_buckets: int = 32) -> DataFrame:
     )
 
 
-def seen_run_ids(spark: SparkSession, path: str) -> set[str]:
-    """run_ids already recorded in the sink manifest (replay detection
-    for at-least-once schedulers — foreachBatch, retried jobs)."""
-    manifest_path = os.path.join(path, "_manifest")
-    if not os.path.isdir(manifest_path):
-        return set()
-    return {
-        r.run_id
-        for r in spark.read.parquet(manifest_path)
-        .select("run_id").distinct().collect()
-    }
-
-
 def materialize(
-    triples: DataFrame, path: str, n_buckets: int = 32,
-    resume: bool = True, run_id: str | None = None,
-    overwrite: bool = True, batch_run: str | None = None,
+    triples: DataFrame, path: str, n_buckets: int = 32, resume: bool = True,
 ) -> dict:
     """Write triples partitioned by (conv_bucket); returns counters.
 
     With ``resume=True``, buckets already recorded in the manifest are
     skipped (exact resume); the write itself uses dynamic partition
-    overwrite so rerunning a half-finished bucket is idempotent.
-
-    ``batch_run`` (streaming micro-batches): the batch id becomes a
-    partition column above conv_bucket and the write is a dynamic
-    partition OVERWRITE of that batch's partitions only — replaying
-    the same batch (foreachBatch is at-least-once: a failure between
-    data write and checkpoint commit re-delivers it) rewrites the same
-    directories instead of appending duplicates.  Readers see an extra
-    ``batch_run`` partition column on streaming sinks.
-
-    ``overwrite=False`` without ``batch_run`` appends (single-writer
-    batch jobs that manage their own dedup).
+    overwrite so rerunning a half-finished bucket is idempotent.  Each
+    call records its buckets in the manifest under a fresh
+    ``run-{epoch ms}`` run id.
     """
     spark = triples.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    run_id = batch_run or run_id or f"run-{int(time.time() * 1000)}"
+    run_id = f"run-{int(time.time() * 1000)}"
     manifest_path = os.path.join(path, "_manifest")
 
     df = with_bucket(triples, n_buckets)
-    part_cols = ["conv_bucket"]
-    if batch_run is not None:
-        df = df.withColumn("batch_run", F.lit(batch_run))
-        part_cols = ["batch_run", "conv_bucket"]
     done: list[int] = []
     if resume and os.path.isdir(manifest_path):
         done = [
@@ -97,11 +67,10 @@ def materialize(
     ).collect()
 
     if counters:
-        mode = "overwrite" if (overwrite or batch_run is not None) else "append"
         (
             df.repartition("conv_bucket")
-            .write.mode(mode)
-            .partitionBy(*part_cols)
+            .write.mode("overwrite")
+            .partitionBy("conv_bucket")
             .parquet(os.path.join(path, "data"))
         )
         spark.createDataFrame(counters).write.mode("append").parquet(
@@ -109,19 +78,14 @@ def materialize(
         )
         # schema sidecar: lets read_triples serve a fully-emptied sink
         # (all buckets deleted -> no parquet footers left to infer
-        # from).  Rewritten on EVERY materialize (round-4 ADVICE: a
-        # batch sink later written with batch_run gains a partition
-        # column a first-write-only sidecar would lack; pre-sidecar
-        # sinks heal on their next write), and normalized to the
-        # READ-BACK column order — data columns in frame order, then
-        # partition columns in partitionBy order, which is where
-        # parquet partition discovery appends them (df.schema puts
-        # conv_bucket/batch_run wherever withColumn left them).
-        read_back = [f for f in df.schema.fields
-                     if f.name not in part_cols]
-        read_back += [df.schema[c] for c in part_cols]
+        # from).  Rewritten on EVERY materialize (pre-sidecar sinks
+        # heal on their next write), in the READ-BACK column order:
+        # data columns in frame order, then conv_bucket, which is
+        # where parquet partition discovery appends it.
         from pyspark.sql.types import StructType
 
+        read_back = [f for f in df.schema.fields if f.name != "conv_bucket"]
+        read_back.append(df.schema["conv_bucket"])
         sp = os.path.join(path, "_schema.json")
         with open(sp + ".tmp", "w") as f:
             f.write(StructType(read_back).json())
@@ -417,7 +381,7 @@ def _read_data(spark: SparkSession, path: str) -> DataFrame:
     spark.read.parquet would fail with 'unable to infer schema'."""
     data_path = os.path.join(path, "data")
     has_parts = os.path.isdir(data_path) and any(
-        d.startswith(("conv_bucket=", "batch_run=", "part-"))
+        d.startswith(("conv_bucket=", "part-"))
         for d in os.listdir(data_path)
     )
     if not has_parts:

@@ -64,11 +64,6 @@ def pool_case(expr: str, values: list[str]) -> str:
     return f"(CASE {expr} {whens} END)"
 
 
-def _q(s: str) -> str:
-    """SQL string literal."""
-    return "'" + s.replace("'", "''") + "'"
-
-
 def recipe_cte(source: str = "documents") -> str:
     """The ``r`` CTE: one row per conversation with all derived picks."""
     cols = [

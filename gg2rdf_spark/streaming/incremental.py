@@ -3,23 +3,16 @@
 The reference's "streaming" is a git-webhook job queue with
 at-least-once redelivery and idempotent per-file overwrite
 (/root/reference/src/action_worker.ts:59-197) — NOT event-time
-streaming.  The faithful Spark analog is therefore **incremental
-micro-batching over new input partitions** with idempotent bucket
-overwrite (materialize.py), plus an optional Structured Streaming
-front-end for continuously-arriving transcript files:
-
-* :func:`run_incremental` — batch-mode catch-up: process only
-  conversations whose bucket is missing from the sink manifest
-  (exact resume after failure; re-delivery safe).
-* :func:`stream_transcripts` — Structured Streaming file source →
-  ``foreachBatch`` running the KG pipeline per micro-batch and
-  appending to the triple sink.  foreachBatch is the right tool
-  because the pipeline is one pass per conversation and each
-  conversation arrives whole (one file); no cross-batch state store
-  is needed — matching the reference's one-document-at-a-time unit.
-* :func:`stream_transcripts_snapshots` — the same runner committing
-  each micro-batch to the snapshot store, which reads the batch's
-  input once.
+streaming.  The Spark analog is one runner,
+:func:`stream_transcripts_snapshots`: a Structured Streaming file
+source over newly arriving transcript files, whose ``foreachBatch``
+runs the KG pass on each micro-batch and commits its triples to the
+snapshot store (``sources/snapshot_store.py``), reading the batch's
+input once.  foreachBatch is the right tool because the pass works one
+conversation at a time and each conversation arrives whole (one file);
+no cross-batch state store is needed — matching the reference's
+one-document-at-a-time unit.  Bulk jobs write the bucket sink instead
+(``jobs/kg_job.py``, ``sources/materialize.py``).
 
 Run ids are ``batch-{token}-{batch_id}``, salted per checkpoint
 generation (:func:`_checkpoint_token`); a checkpoint written before
@@ -31,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline import KGPipeline
-from ..sources.materialize import materialize
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -76,71 +68,12 @@ def _run_id(token: str, batch_id: int) -> str:
     return f"batch-{token}-{batch_id}" if token else f"batch-{batch_id}"
 
 
-def run_incremental(transcripts: DataFrame, sink_path: str,
-                    n_buckets: int = 32) -> dict:
-    """One catch-up batch: full pipeline, resume-aware materialize."""
-    pipe = KGPipeline(transcripts)
-    return materialize(pipe.triples(), sink_path, n_buckets, resume=True)
-
-
-def stream_transcripts(
-    spark: SparkSession, in_dir: str, sink_path: str,
-    checkpoint_dir: str, n_buckets: int = 32,
-):
-    """readStream(files) → per-micro-batch KG pipeline → triple sink.
-
-    Returns the StreamingQuery (caller awaits/stops).  foreachBatch is
-    **at-least-once** (a failure between the sink write and the
-    checkpoint commit re-delivers the batch on restart), so each batch
-    write must be idempotent: the batch id is a partition column and
-    the write is a dynamic partition overwrite of that batch's
-    partitions only — a replay rewrites the same directories instead
-    of appending duplicates.  The manifest run_id is additionally
-    consulted to skip already-committed replays cheaply.
-
-    Run ids are salted with a per-checkpoint token: deleting the
-    checkpoint starts a FRESH run-id namespace, so the restarted
-    batch 0 (which re-covers all input) re-processes rather than being
-    silently skipped against the old generation's 'batch-0' — i.e.
-    checkpoint loss degrades to at-least-once (duplicates you can see
-    and dedup), never to silent data loss (round-5 ADVICE).
-    """
-    from ..sources.materialize import seen_run_ids
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(in_dir)
-    )
-
-    token = _checkpoint_token(checkpoint_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        run_id = _run_id(token, batch_id)
-        if run_id in seen_run_ids(batch_df.sparkSession, sink_path):
-            return  # replayed batch already fully committed
-        pipe = KGPipeline(batch_df, cache=False)
-        materialize(
-            pipe.triples(), sink_path, n_buckets,
-            resume=False, batch_run=run_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_transcripts_snapshots(
     spark: SparkSession, in_dir: str, root: str,
     checkpoint_dir: str, n_buckets: int = 32,
 ):
     """readStream(files) → per-micro-batch KG pipeline → snapshot-store
-    commit: the object-store-safe variant of :func:`stream_transcripts`.
+    commit.  Returns the StreamingQuery (the caller awaits and stops it).
 
     Each micro-batch is one :func:`snapshot_store.commit_append` with
     ``run_id = batch id``.  foreachBatch delivers **at-least-once** (a

@@ -89,24 +89,3 @@ def test_broadcast_join_selected(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
-
-def test_whole_stage_codegen_on_datapipe(spark):
-    """Dedup hashing stays JVM-side (no Python eval nodes)."""
-    from gg2rdf_spark.datapipe.dedup import minhash_signatures
-
-    from gg2rdf_spark.datapipe.dedup import exact_dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # higher-order-function projections (transform/aggregate lambdas)
-    # are JVM-interpreted — no WholeStageCodegen wrapper — but still
-    # never cross into Python:
-    plan = minhash_signatures(docs)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Python" not in plan
-    # the plain hash-agg path does codegen end-to-end (AQE hides the
-    # wrapper in executedPlan.toString, so ask for codegen explain):
-    df2 = exact_dedup(docs)
-    codegen = df2._sc._jvm.PythonSQLUtils.explainString(
-        df2._jdf.queryExecution(), "codegen"
-    )
-    assert "WholeStageCodegen" in codegen and "Python" not in codegen
