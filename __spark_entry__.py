@@ -9,8 +9,8 @@ Query families:
   arithmetic — ground truth, not a parallel parser).
 * ``canon_cc`` / ``linking_join`` — canonicalization CC and the
   entity-link join.
-* ``materialize_delete`` / ``snapshot_*`` — the two triple sinks:
-  resume, delete, replay and incremental reads.
+* ``snapshot_*`` — the triple sink: replay, delete, time travel and
+  incremental reads.
 
 Column names are aligned pairwise (the driver hashes values under
 sorted column names).  Every query has an exact oracle.
@@ -158,7 +158,7 @@ def _q_linking_join(spark, sf_dir):
     )
 
 
-# ---- materialized sink: write -> resume-skip -> delete -> read back -------
+# ---- triple sink: write -> replay-skip -> delete -> read back -------------
 
 # Deterministic triples-shaped derivation shared by BOTH engines (the
 # same text runs on Spark and DuckDB), so the oracle can compute the
@@ -174,9 +174,6 @@ SELECT 'c' || cast(doc_id % 199 AS string) AS conv_id,
        md5(cast(doc_id AS string)) AS obj
 FROM documents
 """
-
-# fixed, deterministic conversation set to delete
-_MAT_DELETE_CONVS = ["c7", "c23", "c42", "c99", "c150"]
 
 
 def _alive(pid: int) -> bool:
@@ -221,55 +218,13 @@ def _scratch_dir(name: str) -> str:
     return p
 
 
-def _q_materialize_delete(spark, sf_dir):
-    """A5/A6 contract surface behind the correctness gate (round-4
-    VERDICT next #6): materialize a bucketed sink, prove exact resume
-    skips every already-written bucket (a replayed row would double a
-    count and hash-mismatch the oracle), journal-swap-delete a
-    conversation set, and return the read-back per-conv survivors.
-    The reference analog is action_worker.ts:153-196 (git add/rm of
-    per-treatment .ttl) — here it is dynamic-partition parquet with a
-    manifest, swap journal, and kernel-flock swap lock
-    (sources/materialize.py).
-    """
-    from gg2rdf_spark.sources.materialize import (
-        delete_conversations, materialize, read_triples,
-    )
-
-    _load(spark, sf_dir, "documents")
-    triples = spark.sql(_MAT_TRIPLES_SQL)
-    path = _scratch_dir("matdel_sink")
-    materialize(triples, path, n_buckets=16)
-    # replay: resume must skip ALL buckets (duplicates would show up
-    # as doubled counts against the oracle)
-    stats = materialize(triples, path, n_buckets=16)
-    assert stats["written_buckets"] == 0, stats
-    delete_conversations(spark, path, _MAT_DELETE_CONVS)
-    return (
-        read_triples(spark, path)
-        .groupBy("conv_id")
-        .agg(F.count("*").alias("n_triples"),
-             F.countDistinct("pred").alias("n_preds"))
-    )
-
-
-def _materialize_delete_oracle() -> str:
-    deleted = ", ".join(f"'{c}'" for c in _MAT_DELETE_CONVS)
-    return f"""
-WITH t AS ({_MAT_TRIPLES_SQL})
-SELECT conv_id, count(*) AS n_triples, count(DISTINCT pred) AS n_preds
-FROM t WHERE conv_id NOT IN ({deleted})
-GROUP BY conv_id
-"""
-
-
 # fixed, deterministic conversation set for the snapshot-store delete
 _SNAP_DELETE_CONVS = ["c2", "c11", "c58", "c101", "c177"]
 
 
 def _q_snapshot_delete(spark, sf_dir):
-    """Object-store-safe sink contract behind the correctness gate
-    (round-4 VERDICT missing #3): append via a version-pointer
+    """The triple sink's contract behind the correctness gate: write
+    -> replay-skip -> delete -> read back.  Append via a version-pointer
     snapshot commit (immutable data files + one atomic
     create-if-absent manifest publish, sources/snapshot_store.py —
     the Iceberg/Delta commit pattern; the reference's production
@@ -360,7 +315,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ttl_validate": _q_ttl_validate,
         "canon_cc": _q_canon_cc,
         "linking_join": _q_linking_join,
-        "materialize_delete": _q_materialize_delete,
         "snapshot_delete": _q_snapshot_delete,
         "snapshot_incremental": _q_snapshot_incremental,
     }
@@ -411,7 +365,6 @@ FROM customer WHERE c_custkey >= 50 OR c_custkey IN (
   SELECT c_custkey - 50 FROM customer WHERE c_custkey >= 50)
 """,
         "linking_join": _linking_oracle(),
-        "materialize_delete": _materialize_delete_oracle(),
         "snapshot_delete": _snapshot_delete_oracle(),
         "snapshot_incremental": _snapshot_incremental_oracle(),
     }

@@ -73,8 +73,8 @@ def stream_groups(
     ``schema`` order); the rows of all groups that close within one
     Arrow chunk leave as one pandas frame.  Equivalent to
     ``groupBy(key).applyInPandas`` but without the per-group Arrow-call
-    overhead (~ms per group — ~10 s at 20k tiny groups, see BENCH.md
-    round 1) and without whole-partition materialization."""
+    overhead (~ms per group — ~10 s at 20k tiny groups) and without
+    whole-partition materialization."""
     par = scaled_partitions(df)
     columns = [f.name for f in schema.fields]
 

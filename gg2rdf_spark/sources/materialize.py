@@ -1,408 +1,24 @@
-"""The bulk triple sink + exact resume (north_rule stage 4, A4-A6).
+"""The bulk sink's two names, over the snapshot store.
 
-``jobs/kg_job.py`` writes here; streaming micro-batches commit to the
-snapshot store instead (``snapshot_store.py``).  Sink shape: the
-triples table partitioned by a hashed ``conv_bucket`` — the
-parquet-directory analog of an Iceberg ``bucket(N, conv_id)`` layout.
-
-Resume semantics (≙ the reference's fileStatus.txt checkpoint,
-/root/reference/src/action_worker.ts:13-57): each run writes a
-``_manifest`` parquet of (conv_bucket, n_triples, n_convs, run_id);
-re-running skips buckets already in the manifest (anti-join), and
-dynamic partition overwrite makes a re-write of a failed bucket
-idempotent — at-least-once scheduling with exactly-once effects at
-bucket granularity.
+``materialize`` is one :func:`snapshot_store.commit_append`; with
+``resume`` its run id names the frame's input files, so a rerun on the
+same input is skipped before anything is written.
 """
 
 from __future__ import annotations
 
-import fcntl
-import os
-import time
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from .snapshot_store import commit_append, input_run_id, read_triples
 
-
-def with_bucket(triples: DataFrame, n_buckets: int = 32) -> DataFrame:
-    return triples.withColumn(
-        "conv_bucket", F.pmod(F.hash("conv_id"), F.lit(n_buckets))
-    )
+__all__ = ["materialize", "read_triples"]
 
 
 def materialize(
     triples: DataFrame, path: str, n_buckets: int = 32, resume: bool = True,
 ) -> dict:
-    """Write triples partitioned by (conv_bucket); returns counters.
-
-    With ``resume=True``, buckets already recorded in the manifest are
-    skipped (exact resume); the write itself uses dynamic partition
-    overwrite so rerunning a half-finished bucket is idempotent.  Each
-    call records its buckets in the manifest under a fresh
-    ``run-{epoch ms}`` run id.
-    """
-    spark = triples.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    run_id = f"run-{int(time.time() * 1000)}"
-    manifest_path = os.path.join(path, "_manifest")
-
-    df = with_bucket(triples, n_buckets)
-    done: list[int] = []
-    if resume and os.path.isdir(manifest_path):
-        done = [
-            r.conv_bucket
-            for r in spark.read.parquet(manifest_path)
-            .select("conv_bucket").distinct().collect()
-        ]
-        if done:
-            df = df.filter(~F.col("conv_bucket").isin(done))
-
-    counters = (
-        df.groupBy("conv_bucket")
-        .agg(
-            F.count("*").alias("n_triples"),
-            F.countDistinct("conv_id").alias("n_convs"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-    ).collect()
-
-    if counters:
-        (
-            df.repartition("conv_bucket")
-            .write.mode("overwrite")
-            .partitionBy("conv_bucket")
-            .parquet(os.path.join(path, "data"))
-        )
-        spark.createDataFrame(counters).write.mode("append").parquet(
-            manifest_path
-        )
-        # schema sidecar: lets read_triples serve a fully-emptied sink
-        # (all buckets deleted -> no parquet footers left to infer
-        # from).  Rewritten on EVERY materialize (pre-sidecar sinks
-        # heal on their next write), in the READ-BACK column order:
-        # data columns in frame order, then conv_bucket, which is
-        # where parquet partition discovery appends it.
-        from pyspark.sql.types import StructType
-
-        read_back = [f for f in df.schema.fields if f.name != "conv_bucket"]
-        read_back.append(df.schema["conv_bucket"])
-        sp = os.path.join(path, "_schema.json")
-        with open(sp + ".tmp", "w") as f:
-            f.write(StructType(read_back).json())
-        os.replace(sp + ".tmp", sp)
-    return {
-        "run_id": run_id,
-        "written_buckets": len(counters),
-        "skipped_buckets": len(done),
-        "n_triples": sum(r.n_triples for r in counters),
-    }
-
-
-# above this, conv_id membership switches from a literal IN to a
-# broadcast join: a large deletion list (GDPR batch, full-corpus
-# re-run) as an IN literal bloats the plan/driver linearly and falls
-# out of codegen; joined as a broadcast frame it stays O(1) plan-size
-_ISIN_MAX = 1000
-
-
-def _id_filter(df: DataFrame, conv_ids: list[str], keep: bool) -> DataFrame:
-    """Rows of ``df`` whose conv_id is (keep=True) / is not (False) in
-    ``conv_ids`` — literal IN for small lists, broadcast semi/anti
-    join for large ones."""
-    if len(conv_ids) <= _ISIN_MAX:
-        # coalesce the tri-valued isin to FALSE so a NULL conv_id row
-        # behaves like the join path: never "in" the list — kept on
-        # delete, dropped on keep (round-5 ADVICE: ~NULL is NULL, which
-        # silently deleted null-key rows only below the 1000-id
-        # threshold)
-        cond = F.coalesce(F.col("conv_id").isin(conv_ids), F.lit(False))
-        return df.filter(cond if keep else ~cond)
-    ids = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(c,) for c in set(conv_ids)], "conv_id string"))
-    return (
-        df.join(ids, "conv_id", "left_semi" if keep else "left_anti")
-        # the join hoists the key column to the front; keep the frame's
-        # column order identical to the filter path so written files
-        # share one layout
-        .select(*df.columns)
-    )
-
-
-def delete_conversations(
-    spark: SparkSession, path: str, conv_ids: list[str],
-) -> dict:
-    """A5 analog — the reference deletes the .ttl of a removed .xml
-    (/root/reference/src/action_worker.ts:179-190).  Here: rewrite only
-    the buckets containing the removed conversations (dynamic partition
-    overwrite touches nothing else) and record a tombstone manifest row.
-
-    No bucket-count parameter: the affected buckets are derived from
-    the DATA (scan for the conv_ids' own conv_bucket values), so this
-    works for any bucketing the sink was written with — unlike
-    hash-re-derivation, which breaks silently on a mismatched count
-    (see snapshot_store, which pins n_buckets in its manifest instead).
-
-    Crash safety (round-2 ADVICE): the bucket swap is JOURNALED.  Kept
-    rows are staged into ``_rewrite-*``; a ``_swap-journal.json`` is
-    then written atomically (tmp + rename) BEFORE any bucket is
-    touched; old bucket dirs are renamed into ``_trash-*`` — OUTSIDE
-    ``data/``, so a crash can never leave a ``conv_bucket=N.old``
-    directory that partition discovery would read as a phantom
-    partition — and staged dirs renamed in.  A crash at ANY point
-    between the journal write and the cleanup is rolled forward by
-    :func:`recover_pending_swap`, which both this function and
-    :func:`read_triples` invoke on entry: every journaled bucket ends
-    fully new, never absent or half-written.  Single writer assumed
-    (the reference's action queue serializes mutations the same way,
-    action_worker.ts:61-79).
-
-    Portability: directory rename is atomic on local/HDFS-like
-    filesystems only.  On S3-style object stores ("rename" =
-    copy+delete) this swap is NOT atomic — route deletes through a
-    table format with a metadata pointer swap (Iceberg
-    ``DELETE FROM``/rewrite_files) instead; this writer is the
-    local-FS analog of exactly that layout (module docstring).
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    recover_pending_swap(path, gc_stale=True)
-    df = _read_data(spark, path)
-    # partition pruning: only buckets actually holding the removed
-    # conversations are read and rewritten
-    buckets = [
-        r.conv_bucket
-        for r in _id_filter(df, conv_ids, keep=True)
-        .select("conv_bucket").distinct().collect()
-    ]
-    if not buckets:
-        return {"buckets_rewritten": 0, "triples_removed": 0}
-    affected = df.filter(F.col("conv_bucket").isin(buckets))
-    n_before = affected.count()
-    kept = _id_filter(affected, conv_ids, keep=False)
-
-    # STAGE, don't self-overwrite: `kept` is a lazy plan over data_path,
-    # so overwriting data_path while reading it is a corruption hazard
-    # on mid-write failure (round-1 VERDICT wrong #4).  Materialize the
-    # kept rows into a temp dir first, journal, then swap.
-    ts = int(time.time() * 1000)
-    tmp = os.path.join(path, f"_rewrite-{ts}")
-    trash = os.path.join(path, f"_trash-{ts}")
-    kept.repartition("conv_bucket").write.mode("overwrite") \
-        .partitionBy("conv_bucket").parquet(tmp)
-    if _fail_injector is not None:
-        _fail_injector()  # test seam: crash after stage, before journal
-
-    os.makedirs(trash, exist_ok=True)
-    # hold the swap lock for the whole journal->swap->cleanup window so
-    # a reader's roll-forward (read_triples -> recover_pending_swap)
-    # can never interleave renames with this live swap
-    token = _acquire_swap_lock(path)
-    try:
-        _write_journal(path, {"tmp": tmp, "trash": trash,
-                              "buckets": [int(b) for b in buckets]})
-        _apply_swap(path, tmp, trash, buckets)
-    finally:
-        _release_swap_lock(path, token)
-    n_after = _read_data(spark, path).filter(
-        F.col("conv_bucket").isin(buckets)
-    ).count()
-    removed = n_before - n_after
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "buckets_rewritten": len(buckets),
-        "triples_removed": removed,
-    }
-
-
-def _journal_path(path: str) -> str:
-    return os.path.join(path, "_swap-journal.json")
-
-
-def _lock_path(path: str) -> str:
-    return os.path.join(path, "_swap.lock")
-
-
-def _acquire_swap_lock(path: str, timeout: float = 60.0) -> int:
-    """Kernel ``flock`` serializing swap application across PROCESSES.
-    Returns the held lock fd; the caller passes it back to
-    :func:`_release_swap_lock`.
-
-    delete_conversations holds it for the whole journal->swap->cleanup
-    window; a reader that finds a journal (crashed writer) takes it
-    before rolling forward.  Without it, a reader-initiated recovery
-    racing a live writer could interleave R1/R2 renames and move NEW
-    data into trash (worse than the crash being recovered from).
-
-    Earlier versions used an O_EXCL lock FILE with an mtime-based
-    stale break, which is structurally racy: any break path (plain
-    remove, or rename-aside with ownership-checked release) has a
-    window where a freshly-acquired lock is broken and two writers
-    enter the critical section with interleaving renames on one
-    shared journal path (round-4/5 ADVICE lineage).  ``flock`` removes
-    the entire staleness class: the KERNEL drops the lock when the
-    holder's fd closes — including on crash/kill — so there is
-    nothing to time out, nothing to break, and no TOCTOU.  This sink
-    is the local-FS materialization path (its bucket swap already
-    requires POSIX atomic rename), so a POSIX advisory lock is within
-    the same contract; the object-store sink (snapshot_store) needs
-    neither renames nor locks.
-
-    The lock file itself is NEVER unlinked: removing and recreating it
-    would let a new opener lock a fresh inode while an old holder
-    still holds the old one — two "held" locks on one name."""
-    lp = _lock_path(path)
-    fd = os.open(lp, os.O_CREAT | os.O_RDWR, 0o644)
-    deadline = time.time() + timeout
-    while True:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            break
-        except OSError:
-            if time.time() > deadline:
-                os.close(fd)
-                raise TimeoutError(f"swap lock busy: {lp}")
-            time.sleep(0.05)
-    # diagnostics only (who holds it); correctness lives in the flock
-    os.ftruncate(fd, 0)
-    os.pwrite(fd, f"{os.getpid()}-{time.time():.3f}".encode(), 0)
-    return fd
-
-
-def _release_swap_lock(path: str, fd: int) -> None:
-    """Closing the fd releases the flock; the file stays (see
-    _acquire_swap_lock on why it must never be unlinked)."""
-    try:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-    finally:
-        os.close(fd)
-
-
-def _write_journal(path: str, payload: dict) -> None:
-    import json
-
-    jp = _journal_path(path)
-    with open(jp + ".tmp", "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(jp + ".tmp", jp)  # atomic publish
-
-
-def _apply_swap(path: str, tmp: str, trash: str, buckets) -> None:
-    """Swap each staged bucket into data/; idempotent, resumable from
-    any interleaving point (see state walk in recover_pending_swap).
-
-    Callers must hold the swap lock (_acquire_swap_lock).  The renames
-    are additionally ENOENT-tolerant as defense in depth: if a peer
-    that broke a stale lock finished a rename first, losing the race
-    is a no-op rather than a crash."""
-    data_path = os.path.join(path, "data")
-    for b in buckets:
-        dst = os.path.join(data_path, f"conv_bucket={b}")
-        src = os.path.join(tmp, f"conv_bucket={b}")
-        old = os.path.join(trash, f"conv_bucket={b}")
-        if not os.path.isdir(old):
-            # R1 not yet done for this bucket: dst still holds OLD data
-            if os.path.isdir(dst):
-                try:
-                    os.rename(dst, old)
-                except FileNotFoundError:
-                    pass
-        if _swap_fail_injector is not None:
-            _swap_fail_injector(b)  # test seam: crash mid-swap (post-R1)
-        if os.path.isdir(src):
-            try:
-                os.rename(src, dst)  # R2; emptied buckets have no src
-            except FileNotFoundError:
-                pass
-    try:
-        os.remove(_journal_path(path))
-    except FileNotFoundError:
-        pass
-
-
-def recover_pending_swap(path: str, gc_stale: bool = False) -> bool:
-    """Roll FORWARD an interrupted delete_conversations swap.
-
-    Per journaled bucket the swap is R1 ``rename(dst → trash/old)``
-    then R2 ``rename(staged → dst)``; the journal exists only while
-    some bucket may be mid-swap.  State walk: ``old`` absent → R1 never
-    ran, dst (if present) is old data → redo R1 then R2; ``old``
-    present + staged present → crashed between R1 and R2 → finish R2;
-    ``old`` present + staged absent → R2 done (or bucket emptied) →
-    nothing.  All cases land on "fully new", so a crash can never lose
-    unrelated conversations in the bucket (the round-2 ADVICE hazard).
-    Returns True if a pending swap was found and completed."""
-    import json
-    import shutil
-
-    jp = _journal_path(path)
-    if not os.path.exists(jp):
-        # no pending swap.  ``gc_stale`` (writer entry only — a READER
-        # must never GC, it could race a live delete's staging dir):
-        # remove staging/trash dirs left by a crash after journal
-        # removal but before cleanup.
-        if gc_stale and os.path.isdir(path):
-            for d in os.listdir(path):
-                if d.startswith(("_rewrite-", "_trash-")):
-                    shutil.rmtree(os.path.join(path, d),
-                                  ignore_errors=True)
-        return False
-    # serialize with any live writer: a journal may exist for the whole
-    # _apply_swap window of an IN-PROGRESS delete, not only after a
-    # crash — rolling forward concurrently would race its renames
-    token = _acquire_swap_lock(path)
-    try:
-        if not os.path.exists(jp):
-            return False  # the writer finished while we waited
-        with open(jp) as f:
-            j = json.load(f)
-        _apply_swap(path, j["tmp"], j["trash"], j["buckets"])
-        shutil.rmtree(j["trash"], ignore_errors=True)
-        shutil.rmtree(j["tmp"], ignore_errors=True)
-    finally:
-        _release_swap_lock(path, token)
-    return True
-
-
-# test seams for crash-injection (tests/test_operators.py::TestDelete)
-_fail_injector = None
-_swap_fail_injector = None
-
-
-def _read_data(spark: SparkSession, path: str) -> DataFrame:
-    """Read data/ — serving an EMPTY frame (from the _schema.json
-    sidecar) when a delete removed every bucket: an all-partition-dirs
-    -gone parquet directory has no footers left, and a bare
-    spark.read.parquet would fail with 'unable to infer schema'."""
-    data_path = os.path.join(path, "data")
-    has_parts = os.path.isdir(data_path) and any(
-        d.startswith(("conv_bucket=", "part-"))
-        for d in os.listdir(data_path)
-    )
-    if not has_parts:
-        sp = os.path.join(path, "_schema.json")
-        if os.path.exists(sp):
-            import json
-
-            from pyspark.sql.types import StructType
-
-            with open(sp) as f:
-                schema = StructType.fromJson(json.load(f))
-            return spark.createDataFrame([], schema)
-    return spark.read.parquet(data_path)
-
-
-def read_triples(spark: SparkSession, path: str) -> DataFrame:
-    # a crashed delete must not be readable as partial state: complete
-    # it first (no-op unless a journal is present — one os.path.exists)
-    recover_pending_swap(path)
-    return _read_data(spark, path)
-
-
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "_manifest"))
+    """Append ``triples`` to the snapshot store at ``path`` as one
+    commit; ``resume=False`` commits under a fresh run id."""
+    return commit_append(
+        triples, path, n_buckets=n_buckets,
+        run_id=input_run_id(triples) if resume else None)

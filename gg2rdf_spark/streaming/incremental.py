@@ -11,8 +11,8 @@ snapshot store (``sources/snapshot_store.py``), reading the batch's
 input once.  foreachBatch is the right tool because the pass works one
 conversation at a time and each conversation arrives whole (one file);
 no cross-batch state store is needed — matching the reference's
-one-document-at-a-time unit.  Bulk jobs write the bucket sink instead
-(``jobs/kg_job.py``, ``sources/materialize.py``).
+one-document-at-a-time unit.  Bulk jobs commit to the same store,
+once per job (``jobs/kg_job.py``).
 
 Run ids are ``batch-{token}-{batch_id}``, salted per checkpoint
 generation (:func:`_checkpoint_token`); a checkpoint written before

@@ -38,7 +38,7 @@ def test_permission_denied_counts_as_alive(monkeypatch):
 
 def test_every_query_has_an_oracle():
     assert set(E.queries()) == set(E.oracle_sql())
-    assert len(E.queries()) == 10
+    assert len(E.queries()) == 9
 
 
 def test_linking_oracle_keeps_its_old_name():

@@ -51,9 +51,9 @@ def pipe(spark, job):
 
 
 def test_triple_counts_agree(spark, job, pipe):
-    from gg2rdf_spark.sources.materialize import read_triples
+    from gg2rdf_spark.sources.snapshot_store import read_triples
 
-    n = job["first"]["materialize"]["n_triples"]
+    n = job["first"]["commit"]["n_triples"]
     assert n > 0
     assert n == read_triples(spark, job["sink"]).count()
     assert n == pipe.triples().count()
@@ -67,7 +67,7 @@ def test_status_counts_agree(job, pipe):
 
 
 def test_one_turtle_document_per_conversation_with_triples(spark, job):
-    from gg2rdf_spark.sources.materialize import read_triples
+    from gg2rdf_spark.sources.snapshot_store import read_triples
 
     ttl = [r["conv_id"] for r in
            spark.read.parquet(job["ttl"]).select("conv_id").collect()]
@@ -77,9 +77,13 @@ def test_one_turtle_document_per_conversation_with_triples(spark, job):
     assert set(ttl) == with_triples
 
 
-def test_rerun_resumes_every_bucket(job):
-    first, second = job["first"]["materialize"], job["second"]["materialize"]
-    assert first["written_buckets"] > 0 and first["skipped_buckets"] == 0
-    assert second["written_buckets"] == 0
-    assert second["skipped_buckets"] == first["written_buckets"]
-    assert second["n_triples"] == 0
+def test_rerun_commits_nothing(job):
+    """The commit's run id names the input files: a rerun over the same
+    input publishes no version and writes no rows."""
+    first, second = job["first"]["commit"], job["second"]["commit"]
+    assert not first["skipped"] and first["version"] == 1
+    assert second["skipped"] and second["n_triples"] == 0
+    assert second["run_id"] == first["run_id"]
+    assert second["version"] == first["version"]
+    # one commit's data files, nothing written by the rerun
+    assert len(os.listdir(os.path.join(job["sink"], "files"))) == 1

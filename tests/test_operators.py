@@ -112,27 +112,103 @@ class TestDedup:
                        ("c2", "<u1>", "a", "<k>")]
 
 
+def _file_triples(spark, path, n):
+    """``n`` one-triple conversations, written to parquet and read
+    back, so the frame names its input files."""
+    spark.createDataFrame(
+        [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(n)],
+        "conv_id string, block int, subj_ord long, subj string, "
+        "pred string, obj string, obj_ord long",
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
 class TestMaterialize:
     def test_resume_skips_done_buckets(self, spark, tmp_path):
+        """With resume the run id names the input files: a rerun over
+        the same files is skipped before anything is written."""
+        from gg2rdf_spark.sources import snapshot_store as ss
         from gg2rdf_spark.sources.materialize import (
-            materialize, read_manifest, read_triples,
+            materialize, read_triples,
         )
 
-        t = spark.createDataFrame(
-            [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(40)],
-            "conv_id string, block int, subj_ord long, subj string, "
-            "pred string, obj string, obj_ord long",
-        )
+        t = _file_triples(spark, str(tmp_path / "in"), 40)
         path = str(tmp_path / "sink")
         r1 = materialize(t, path, n_buckets=8)
-        assert r1["written_buckets"] > 0 and r1["skipped_buckets"] == 0
+        assert not r1["skipped"] and r1["n_triples"] == 40
         assert read_triples(spark, path).count() == 40
-        # second run: everything already recorded → full skip
+        n_files = len(os.listdir(os.path.join(path, "files")))
+        # second run: same input files → same run id → full skip
         r2 = materialize(t, path, n_buckets=8)
-        assert r2["written_buckets"] == 0
-        assert r2["skipped_buckets"] == r1["written_buckets"]
-        assert read_manifest(spark, path).count() == r1["written_buckets"]
+        assert r2["skipped"] and r2["n_triples"] == 0
+        assert r2["run_id"] == r1["run_id"]
+        assert ss.current_version(path) == r1["version"]
+        assert len(os.listdir(os.path.join(path, "files"))) == n_files
         assert read_triples(spark, path).count() == 40
+        # without resume every call commits under a fresh run id
+        r3 = materialize(t, path, n_buckets=8, resume=False)
+        assert not r3["skipped"] and r3["run_id"] != r1["run_id"]
+        assert read_triples(spark, path).count() == 80
+
+    def test_resume_needs_input_files(self, spark, tmp_path):
+        """A frame that reads no files has no input to name: resume
+        raises instead of sharing a run id with another such frame —
+        also over a persisted frame, whose plan hides its files."""
+        from gg2rdf_spark.sources.materialize import materialize
+
+        path = str(tmp_path / "sink")
+        with pytest.raises(ValueError, match="no input files"):
+            materialize(spark.range(3).selectExpr(
+                "cast(id as string) as conv_id"), path)
+        cached = _file_triples(spark, str(tmp_path / "in"), 3).persist()
+        try:
+            with pytest.raises(ValueError, match="no input files"):
+                materialize(cached, path)
+        finally:
+            cached.unpersist()
+        assert not os.path.exists(path)
+
+    def test_crash_before_publish_then_rerun_commits_once(
+        self, spark, tmp_path
+    ):
+        """A crash between the data-file write and the publish leaves
+        nothing visible; the rerun over the same input commits every
+        triple exactly once, and a further rerun is skipped."""
+        from gg2rdf_spark.pipeline import KGPipeline
+        from gg2rdf_spark.sources import snapshot_store as ss
+        from gg2rdf_spark.sources.materialize import (
+            materialize, read_triples,
+        )
+        from gg2rdf_spark.sources.synthsql import transcripts_sql
+
+        inp = str(tmp_path / "in")
+        spark.sql(transcripts_sql(
+            "(SELECT id AS doc_id FROM range(20))", dialect="spark")
+        ).write.parquet(inp)
+        path = str(tmp_path / "sink")
+
+        def triples():
+            return KGPipeline(spark.read.parquet(inp), cache=False).triples()
+
+        def boom():
+            raise RuntimeError("injected crash before publish")
+
+        ss._commit_fail_injector = boom
+        try:
+            with pytest.raises(RuntimeError, match="before publish"):
+                materialize(triples(), path, n_buckets=8)
+        finally:
+            ss._commit_fail_injector = None
+        assert ss.current_version(path) is None
+
+        r = materialize(triples(), path, n_buckets=8)
+        assert not r["skipped"]
+        assert materialize(triples(), path, n_buckets=8)["skipped"]
+        want = triples()
+        got = read_triples(spark, path).select(*want.columns)
+        assert got.count() == r["n_triples"] == want.count() > 0
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
 
 
 class TestStreaming:
@@ -286,23 +362,21 @@ class TestStreaming:
 
 class TestDelete:
     def test_delete_conversations(self, spark, tmp_path):
-        """A5 delete analog: removing conversations rewrites only their
-        buckets (gg2rdf deletes the .ttl of a removed .xml,
-        action_worker.ts:179-190)."""
+        """A5 delete analog on the bulk sink: removing conversations
+        rewrites only their buckets (gg2rdf deletes the .ttl of a
+        removed .xml, action_worker.ts:179-190)."""
+        from gg2rdf_spark.sources import snapshot_store as ss
         from gg2rdf_spark.sources.materialize import (
-            delete_conversations, materialize, read_triples,
+            materialize, read_triples,
         )
 
-        t = spark.createDataFrame(
-            [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(30)],
-            "conv_id string, block int, subj_ord long, subj string, "
-            "pred string, obj string, obj_ord long",
-        )
+        t = _file_triples(spark, str(tmp_path / "in"), 30)
         path = str(tmp_path / "sink")
         materialize(t, path, n_buckets=4)
         assert read_triples(spark, path).count() == 30
-        stats = delete_conversations(spark, path, ["c1", "c2", "c3"])
+        stats = ss.delete_conversations(spark, path, ["c1", "c2", "c3"])
         assert stats["triples_removed"] == 3
+        assert 1 <= stats["buckets_rewritten"] <= 3
         left = read_triples(spark, path)
         assert left.count() == 27
         assert left.filter("conv_id in ('c1','c2','c3')").count() == 0
@@ -314,121 +388,55 @@ class TestDelete:
         literal IN to a broadcast semi/anti join (a million-id IN
         bloats the plan linearly); forcing the threshold to 0 must
         give byte-identical delete semantics and column order."""
-        from gg2rdf_spark.sources import materialize as M
+        from gg2rdf_spark.sources import snapshot_store as ss
 
-        monkeypatch.setattr(M, "_ISIN_MAX", 0)
+        monkeypatch.setattr(ss, "_ISIN_MAX", 0)
         t = spark.createDataFrame(
             [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(30)],
             "conv_id string, block int, subj_ord long, subj string, "
             "pred string, obj string, obj_ord long",
         )
         path = str(tmp_path / "sink")
-        M.materialize(t, path, n_buckets=4)
-        stats = M.delete_conversations(spark, path, ["c1", "c2", "c3"])
+        ss.commit_append(t, path, n_buckets=4)
+        stats = ss.delete_conversations(spark, path, ["c1", "c2", "c3"])
         assert stats["triples_removed"] == 3
-        left = M.read_triples(spark, path)
+        left = ss.read_triples(spark, path)
         assert left.count() == 27
         assert left.filter("conv_id in ('c1','c2','c3')").count() == 0
         # join path must not reorder columns vs the filter path
-        assert left.columns[:7] == t.columns
+        assert left.columns == t.columns + ["conv_bucket"]
 
     def test_delete_all_conversations_keeps_sink_readable(
         self, spark, tmp_path
     ):
-        """Round-3 ADVICE: deleting EVERY conversation leaves data/ with
-        no partition dirs (no parquet footer to infer a schema from);
-        the _schema.json sidecar must keep the sink readable as an
-        empty frame with the original schema."""
+        """Deleting EVERY conversation of the bulk sink leaves no data
+        file; the manifest's schema keeps it readable as an empty
+        frame with the original columns."""
+        from gg2rdf_spark.sources import snapshot_store as ss
         from gg2rdf_spark.sources.materialize import (
-            delete_conversations, materialize, read_triples,
+            materialize, read_triples,
         )
 
-        t = spark.createDataFrame(
-            [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(6)],
-            "conv_id string, block int, subj_ord long, subj string, "
-            "pred string, obj string, obj_ord long",
-        )
+        t = _file_triples(spark, str(tmp_path / "in"), 6)
         path = str(tmp_path / "sink")
         materialize(t, path, n_buckets=4)
-        stats = delete_conversations(
+        stats = ss.delete_conversations(
             spark, path, [f"c{i}" for i in range(6)])
         assert stats["triples_removed"] == 6
         left = read_triples(spark, path)
         assert left.count() == 0
-        assert "conv_id" in left.columns and "conv_bucket" in left.columns
+        assert left.columns == t.columns + ["conv_bucket"]
         # a fresh delete against the emptied sink is also a no-op
-        stats2 = delete_conversations(spark, path, ["c0"])
+        stats2 = ss.delete_conversations(spark, path, ["c0"])
         assert stats2["triples_removed"] == 0
-
-    def test_sidecar_refreshes_and_matches_read_back_shape(
-        self, spark, tmp_path
-    ):
-        """The _schema.json sidecar must serve the same columns, in the
-        same order, as a live parquet read: data columns in frame
-        order, then the conv_bucket partition column, which partition
-        discovery appends last.  It is rewritten on every write that
-        writes a bucket, not only on the first."""
-        import json
-
-        from gg2rdf_spark.sources import materialize as M
-
-        t = spark.createDataFrame(
-            [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(6)],
-            "conv_id string, block int, subj_ord long, subj string, "
-            "pred string, obj string, obj_ord long",
-        )
-        path = str(tmp_path / "sink")
-        sidecar = f"{path}/_schema.json"
-
-        def sidecar_cols():
-            with open(sidecar) as f:
-                return [x["name"] for x in json.load(f)["fields"]]
-
-        M.materialize(t, path, n_buckets=4)
-        live_cols = M.read_triples(spark, path).columns
-        assert sidecar_cols() == live_cols == t.columns + ["conv_bucket"]
-        # a later write rewrites the sidecar in place
-        os.remove(sidecar)
-        M.materialize(t, path, n_buckets=4, resume=False)
-        assert sidecar_cols() == live_cols
-
-    def test_swap_lock_excludes_and_survives_crash(self, tmp_path):
-        """Round-4/5 ADVICE lineage: the swap lock is a kernel flock —
-        mutual exclusion holds with no stale-break path at all (the
-        kernel releases a crashed holder's lock when its fd closes),
-        so the two-writers-after-a-broken-fresh-lock race of the
-        O_EXCL + mtime design is structurally gone."""
-        import os
-
-        from gg2rdf_spark.sources import materialize as M
-
-        path = str(tmp_path)
-        fd = M._acquire_swap_lock(path)
-        lp = M._lock_path(path)
-        assert os.path.exists(lp)
-        # a second acquirer (separate open-file-description, same as a
-        # separate process) must NOT get the lock while it is held
-        with pytest.raises(TimeoutError):
-            M._acquire_swap_lock(path, timeout=0.3)
-        # crash simulation: holder dies without calling release — the
-        # bare close releases the flock, so the next acquire succeeds
-        os.close(fd)
-        fd2 = M._acquire_swap_lock(path, timeout=1.0)
-        # normal release; the lock FILE stays (unlink would let a new
-        # opener lock a fresh inode while an old holder held the old)
-        M._release_swap_lock(path, fd2)
-        assert os.path.exists(lp)
-        fd3 = M._acquire_swap_lock(path, timeout=1.0)
-        M._release_swap_lock(path, fd3)
 
     def test_delete_crash_before_swap_keeps_sink_readable(
         self, spark, tmp_path
     ):
-        """Round-1 VERDICT wrong #4 done-condition: kill the rewrite
-        between staging and swap — the sink must still read the FULL
-        original data (no self-overwrite corruption) and a retry must
-        succeed."""
-        from gg2rdf_spark.sources import materialize as M
+        """Kill a delete between writing the survivor files and
+        publishing the new version (the pointer swap): the sink must
+        still read the FULL original data and a retry must succeed."""
+        from gg2rdf_spark.sources import snapshot_store as ss
 
         t = spark.createDataFrame(
             [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(20)],
@@ -436,71 +444,24 @@ class TestDelete:
             "pred string, obj string, obj_ord long",
         )
         path = str(tmp_path / "sink")
-        M.materialize(t, path, n_buckets=4)
+        v = ss.commit_append(t, path, n_buckets=4)["version"]
 
         def boom():
             raise RuntimeError("injected crash before swap")
 
-        M._fail_injector = boom
+        ss._commit_fail_injector = boom
         try:
             with pytest.raises(RuntimeError, match="injected"):
-                M.delete_conversations(spark, path, ["c5"])
+                ss.delete_conversations(spark, path, ["c5"])
         finally:
-            M._fail_injector = None
+            ss._commit_fail_injector = None
         # sink unchanged and fully readable after the crash
-        assert M.read_triples(spark, path).count() == 20
-        # retry succeeds (resumable)
-        stats = M.delete_conversations(spark, path, ["c5"])
+        assert ss.current_version(path) == v
+        assert ss.read_triples(spark, path).count() == 20
+        # retry succeeds
+        stats = ss.delete_conversations(spark, path, ["c5"])
         assert stats["triples_removed"] == 1
-        assert M.read_triples(spark, path).count() == 19
-
-    def test_delete_crash_mid_swap_recovers(self, spark, tmp_path):
-        """Round-2 ADVICE (medium): a crash BETWEEN the two renames of
-        a bucket swap used to leave that bucket absent (unrelated
-        conversations lost) and a ``.old`` dir that partition discovery
-        read as a phantom partition.  Now the swap is journaled: the
-        next read or delete rolls it forward, so the sink ends exactly
-        post-delete — nothing lost, no phantom partitions, no type
-        flip."""
-        from gg2rdf_spark.sources import materialize as M
-
-        t = spark.createDataFrame(
-            [(f"c{i}", 2, 0, f"<s{i}>", "a", "<k>", 0) for i in range(20)],
-            "conv_id string, block int, subj_ord long, subj string, "
-            "pred string, obj string, obj_ord long",
-        )
-        path = str(tmp_path / "sink")
-        M.materialize(t, path, n_buckets=4)
-
-        calls = []
-
-        def boom(bucket):
-            # crash on the FIRST bucket, after its dst→trash rename
-            calls.append(bucket)
-            raise RuntimeError("injected crash mid-swap")
-
-        M._swap_fail_injector = boom
-        try:
-            with pytest.raises(RuntimeError, match="mid-swap"):
-                M.delete_conversations(spark, path, ["c5"])
-        finally:
-            M._swap_fail_injector = None
-        assert calls  # the injector actually fired post-R1
-        import os
-
-        assert os.path.exists(M._journal_path(path))  # pending swap
-
-        # read path rolls the swap forward: full post-delete state,
-        # schema unchanged (conv_bucket stays an int partition — no
-        # phantom 'N.old' partition value)
-        left = M.read_triples(spark, path)
-        assert not os.path.exists(M._journal_path(path))
-        assert left.count() == 19
-        assert left.filter("conv_id = 'c5'").count() == 0
-        assert dict(left.dtypes)["conv_bucket"] == "int"
-        # idempotent: another delete of the same id is a no-op
-        stats = M.delete_conversations(spark, path, ["c5"])
-        assert stats["triples_removed"] == 0
+        assert ss.read_triples(spark, path).count() == 19
 
     def test_streaming_batch_replay_idempotent(self, spark, tmp_path):
         """foreachBatch is at-least-once: a batch that Spark replays

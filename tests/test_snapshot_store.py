@@ -104,6 +104,11 @@ class TestSnapshotStore:
         # snapshot isolation: the pre-delete version is still readable
         old = ss.read_triples(spark, root, version=v_pre)
         assert old.count() == 300
+        # an empty id list deletes nothing and publishes no version
+        v_post = ss.current_version(root)
+        stats = ss.delete_conversations(spark, root, [])
+        assert stats["triples_removed"] == 0
+        assert ss.current_version(root) == v_post
         ops = [s["op"] for s in ss.snapshots(root)]
         assert ops == ["append", "delete"]
 
@@ -207,6 +212,10 @@ class TestSnapshotStore:
         want = ["c3", "c17"]
         got = ss.read_conversations(spark, root, want)
         assert _rows(got) == _rows(t.filter(F.col("conv_id").isin(want)))
+        # an empty id list reads no rows, with the table's schema
+        none = ss.read_conversations(spark, root, [])
+        assert none.count() == 0
+        assert none.dtypes == ss.read_triples(spark, root).dtypes
         # pruning evidence: the lookup plan reads a strict subset of
         # the full table's files, exactly the target buckets' dirs
         man = ss._load_current(root)
